@@ -112,7 +112,8 @@ def kg_job(spark, n_pages: int, richness: int = 1) -> dict:
 
 def run_default() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from kgspark.session import host_cpus
+    cpus = host_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = _spark(cpus)
 

@@ -27,10 +27,30 @@ def _default_local_dir() -> str:
     return "/tmp"
 
 
+def host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else every core of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_mem() -> str:
+    """About half of physical memory (MemTotal): local mode runs every task
+    inside the one driver JVM, and the rest of the box is left to the
+    Python workers, the page cache and the OS. Without /proc/meminfo
+    (non-Linux hosts) fall back to 4g."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(app: str = "kgspark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = host_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (
@@ -48,10 +68,11 @@ def get_spark(app: str = "kgspark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode = driver-only JVM: give it real memory (the sandbox box
-        # has 128G; a small heap makes 32 concurrent tasks GC-bound and
-        # wrecks scaling long before data volume does)
-        .config("spark.driver.memory", os.environ.get("KGSPARK_DRIVER_MEM", "48g"))
+        # local mode = driver-only JVM: give it real memory (a small heap
+        # makes concurrent tasks GC-bound long before data volume does),
+        # sized from the host so it never outgrows physical RAM
+        .config("spark.driver.memory",
+                os.environ.get("KGSPARK_DRIVER_MEM") or default_driver_mem())
         # GC: G1 (JVM default; A/B'd vs ParallelGC — G1 wins on this DAG)
         # with an explicitly enlarged young generation. The provenance
         # aggregation (collect_set states over millions of classes) is

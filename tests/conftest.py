@@ -10,6 +10,6 @@ from kgspark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("kgspark-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("kgspark-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
