@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgspark import segments
+
 TOKEN_RE = "[a-z0-9]+"
 DEFAULT_BAND_CAP = 20  # near-dup candidate blocks larger than this are dropped
 
@@ -335,66 +337,7 @@ def ann_lsh(emb: DataFrame, query_vec: list[float], k: int = 10,
     return ann_bruteforce(sub, query_vec, k, id_col, emb_col)
 
 
-_ANN_PARTS = ("vectors", "deleted", "ids")
-
 DEFAULT_ID_BUCKETS = 64
-
-
-def _meta_read(path: str) -> dict:
-    import json as _json
-    from pathlib import Path as _P
-    meta = _P(path) / "_meta.json"
-    return _json.loads(meta.read_text()) if meta.exists() else {}
-
-
-def _meta_merge(path: str, **kv) -> None:
-    import json as _json
-    from pathlib import Path as _P
-    m = _meta_read(path)
-    m.update(kv)
-    (_P(path) / "_meta.json").write_text(_json.dumps(m))
-
-
-def _ids_sidecar(vecs: DataFrame, id_col: str, id_buckets: int) -> DataFrame:
-    """(id, id_bucket) rows mirroring one generation's vectors 1:1 — the
-    id-hash-partitioned sidecar that lets update-time collision detection
-    prune to the delta ids' buckets instead of scanning every vector row
-    (the vectors themselves partition by bucket/cluster, which is
-    uncorrelated with id)."""
-    from kgspark.fulltext import _id_bucket_col
-    return (vecs.select(F.col(id_col).alias("id"))
-            .withColumn("id_bucket",
-                        _id_bucket_col(F.col("id"), id_buckets)))
-
-
-def _ann_live_id_rows(spark, path: str, committed: int, id_col: str,
-                      delta_buckets: list[int] | None) -> DataFrame:
-    """(id_col, gen) of live index entries for collision detection. Reads
-    the id-bucketed ids/ sidecar pruned to ``delta_buckets`` when the index
-    has one (every index built by this code does); falls back to a
-    column-pruned scan of vectors/ for pre-sidecar indexes."""
-    from kgspark import segments
-    if segments.has_gens(path + "/ids"):
-        rows = (spark.read.parquet(path + "/ids")
-                .filter(F.col("gen") <= committed))
-        if delta_buckets is not None:
-            rows = rows.filter(F.col("id_bucket").isin(delta_buckets))
-        rows = rows.select(F.col("id").alias(id_col), "gen")
-    else:  # pre-sidecar layout: no pruning possible
-        rows = (spark.read.parquet(path + "/vectors")
-                .filter(F.col("gen") <= committed).select(id_col, "gen"))
-    return _ann_live(spark, path, committed, rows, id_col)
-
-
-def _delta_id_buckets(emb: DataFrame, id_col: str,
-                      id_buckets: int) -> list[int]:
-    """Distinct id_bucket values of a delta batch (≤id_buckets values; one
-    O(delta) job)."""
-    from kgspark.fulltext import _id_bucket_col
-    return sorted({
-        r["b"] for r in
-        emb.select(_id_bucket_col(F.col(id_col), id_buckets).alias("b"))
-        .distinct().collect()})
 
 
 def _bucketed_vectors(emb: DataFrame, n_planes: int, id_col: str,
@@ -405,24 +348,19 @@ def _bucketed_vectors(emb: DataFrame, n_planes: int, id_col: str,
     return vecs.join(buckets, id_col)
 
 
-def _ann_write_gen(df: DataFrame, path: str, gen: int,
-                   part_cols: list[str]) -> None:
-    (df.withColumn("gen", F.lit(gen))
-       .write.mode("append").partitionBy("gen", *part_cols).parquet(path))
-
-
-def _ann_live(spark, path: str, committed: int, rows: DataFrame,
-              id_col: str) -> DataFrame:
-    """Anti-join the tombstones (broadcast — sized by re-ingest count)."""
-    from kgspark import segments
-    if not segments.has_gens(path + "/deleted"):
-        return rows
-    dead = (spark.read.parquet(path + "/deleted")
-            .filter(F.col("gen") <= committed)
-            .select(F.col("id").alias("__dead_id"), "dead_gen"))
-    return rows.join(F.broadcast(dead),
-                     (rows[id_col] == F.col("__dead_id"))
-                     & (rows["gen"] == F.col("dead_gen")), "left_anti")
+def _update_vectors(emb: DataFrame, path: str, kind: str, id_col: str,
+                    vectors) -> int:
+    """The shared ANN/IVF update: fold a delta batch in as one committed
+    generation. ``vectors(ix)`` builds the delta's vectors rows from the
+    opened index's parameters. A delta id already in the index REPLACES its old
+    vector (tombstoned, so a re-embedded id moves bucket/cluster
+    correctly); collision detection reads the id part pruned to the delta
+    ids' buckets. Returns the new committed generation."""
+    ix = segments.GenIndex.open(emb.sparkSession, path, kind, write=True)
+    ix.check_unique(emb, id_col, f"update_{kind.lower()}_index")
+    rows = {"vectors": vectors(ix),
+            "ids": emb.select(F.col(id_col).alias("id"))}
+    return ix.append(rows, ix.collisions(emb, id_col))
 
 
 def build_ann_index(emb: DataFrame, path: str, n_planes: int = 12,
@@ -435,34 +373,23 @@ def build_ann_index(emb: DataFrame, path: str, n_planes: int = 12,
     the scan — the IVF-file/nprobe layout), instead of recomputing buckets
     over the whole table per query (the r1 weakness). At 10^12 scale this
     is the difference between a full scan and touching a handful of
-    partitions."""
-    import shutil
-    shutil.rmtree(path, ignore_errors=True)
-    from kgspark import segments
-    _ann_write_gen(_bucketed_vectors(emb, n_planes, id_col, emb_col),
-                   path + "/vectors", 0, ["bucket"])
-    _ann_write_gen(_ids_sidecar(emb, id_col, DEFAULT_ID_BUCKETS),
-                   path + "/ids", 0, ["id_bucket"])
-    # n_planes is baked into every stored bucket: persist it so updates and
-    # queries can't silently mix bucket widths (a mismatched caller value
-    # would probe/append inconsistent buckets and lose vectors);
-    # id_buckets pins the ids/ sidecar partitioning the same way
-    _meta_merge(path, n_planes=n_planes, id_buckets=DEFAULT_ID_BUCKETS)
-    segments.commit_gen(path, 0)
+    partitions. n_planes is baked into every stored bucket, so the index
+    keeps it and refuses a caller that disagrees."""
+    ix = segments.GenIndex.create(emb.sparkSession, path,
+                                  {"vectors": ["bucket"]}, "ids",
+                                  DEFAULT_ID_BUCKETS, n_planes=n_planes)
+    ix.append({"vectors": _bucketed_vectors(emb, n_planes, id_col, emb_col),
+               "ids": emb.select(F.col(id_col).alias("id"))})
 
 
-def _ann_check_planes(path: str, n_planes: int | None, op: str,
-                      default: int = 12) -> int:
-    """Validate/resolve n_planes against the index's stored metadata."""
-    import json as _json
-    from pathlib import Path as _P
-    meta = _P(path) / "_meta.json"
-    if not meta.exists():  # pre-metadata index: trust the caller
-        return n_planes if n_planes is not None else default
-    stored = int(_json.loads(meta.read_text())["n_planes"])
+def _ann_check_planes(ix: segments.GenIndex, n_planes: int | None,
+                      op: str) -> int:
+    """Resolve n_planes from the index; a mismatched caller value would
+    probe/append inconsistent buckets and lose vectors."""
+    stored = int(ix.meta["n_planes"])
     if n_planes is not None and n_planes != stored:
         raise ValueError(f"{op}: n_planes={n_planes} does not match the "
-                         f"index at {path} (built with {stored})")
+                         f"index at {ix.root} (built with {stored})")
     return stored
 
 
@@ -470,73 +397,19 @@ def update_ann_index(emb: DataFrame, path: str, n_planes: int | None = None,
                      id_col: str = "vec_id",
                      emb_col: str = "embedding") -> int:
     """Fold a delta batch of vectors into an existing ANN index as a new
-    committed generation: O(delta) bucketing + append. A delta id already
-    in the index REPLACES its old vector (tombstoned, so a re-embedded doc
-    moves buckets correctly). Collision detection reads the id-bucketed
-    ids/ sidecar PRUNED to the delta ids' buckets — no corpus-sized touch
-    anywhere in the update. Crash-safe like update_fulltext_index: marker
-    last, readers see the previous snapshot until commit. Returns the new
-    committed generation."""
-    from kgspark import segments
-    spark = emb.sparkSession
-    segments.finish_swap(path)
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed ANN index at {path}; "
-                         "run build_ann_index first")
-    segments.clean_uncommitted(path, _ANN_PARTS)
-    dup = (emb.groupBy(id_col).agg(F.count(F.lit(1)).alias("c"))
-           .filter(F.col("c") > 1).first())
-    if dup is not None:
-        raise ValueError(f"update_ann_index: duplicate id {dup[0]!r} "
-                         "in delta batch — one row per id per batch")
-    n_planes = _ann_check_planes(path, n_planes, "update_ann_index")
-    id_buckets = int(_meta_read(path).get("id_buckets", DEFAULT_ID_BUCKETS))
-    new_gen = committed + 1
-    delta_ids = emb.select(F.col(id_col).alias("__new_id")).distinct()
-    live_ids = _ann_live_id_rows(spark, path, committed, id_col,
-                                 _delta_id_buckets(emb, id_col, id_buckets))
-    coll = (live_ids.join(F.broadcast(delta_ids),
-                          F.col(id_col) == F.col("__new_id"), "left_semi")
-            .select(F.col(id_col).alias("id"), F.col("gen").alias("dead_gen")))
-    _ann_write_gen(_bucketed_vectors(emb, n_planes, id_col, emb_col),
-                   path + "/vectors", new_gen, ["bucket"])
-    _ann_write_gen(_ids_sidecar(emb, id_col, id_buckets),
-                   path + "/ids", new_gen, ["id_bucket"])
-    _ann_write_gen(coll, path + "/deleted", new_gen, [])
-    segments.commit_gen(path, new_gen)
-    return new_gen
+    committed generation: O(delta) bucketing + append, crash-safe under the
+    segments commit protocol (see ``_update_vectors``)."""
+    return _update_vectors(emb, path, "ANN", id_col, lambda ix: (
+        _bucketed_vectors(emb, _ann_check_planes(
+            ix, n_planes, "update_ann_index"), id_col, emb_col)))
 
 
-def compact_ann_index(spark, path: str, id_col: str = "vec_id",
-                      part_col: str = "bucket") -> None:
-    """Rewrite live vectors as a fresh gen-0 index and swap it in
-    (journaled) — bounds tombstones and per-partition file counts. For an
-    IVF index pass ``part_col='cluster'`` (centroids carry over)."""
-    import shutil
-    from pathlib import Path as _P
-
-    from kgspark import segments
-    segments.finish_swap(path)
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed ANN index at {path}")
-    segments.clean_uncommitted(path, _ANN_PARTS)
-    staging = path + ".compact.staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    live = _ann_live(spark, path, committed,
-                     (spark.read.parquet(path + "/vectors")
-                      .filter(F.col("gen") <= committed)), id_col).drop("gen")
-    _ann_write_gen(live, staging + "/vectors", 0, [part_col])
-    id_buckets = int(_meta_read(path).get("id_buckets", DEFAULT_ID_BUCKETS))
-    _ann_write_gen(_ids_sidecar(live, id_col, id_buckets),
-                   staging + "/ids", 0, ["id_bucket"])
-    for side in ("_centroids.json", "_meta.json"):
-        f = _P(path) / side
-        if f.exists():
-            shutil.copy(f, _P(staging) / side)
-    segments.commit_gen(staging, 0)
-    segments.compact_swap(path, staging)
+def compact_ann_index(spark, path: str, id_col: str = "vec_id") -> None:
+    """Rewrite the live vectors of an ANN or IVF index as a fresh gen-0
+    index and swap it in (journaled) — bounds tombstones and
+    per-partition file counts; IVF centroids carry over."""
+    ix = segments.GenIndex.open(spark, path, "vector", write=True)
+    ix.compact({"vectors": ix.live("vectors", id_col), "ids": ix.id_rows()})
 
 
 def ann_query_indexed(spark, path: str, query_vec: list[float], k: int = 10,
@@ -550,11 +423,8 @@ def ann_query_indexed(spark, path: str, query_vec: list[float], k: int = 10,
     tombstoned vectors (broadcast anti-join — see update_ann_index)."""
     from itertools import combinations
 
-    from kgspark import segments
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed ANN index at {path}")
-    n_planes = _ann_check_planes(path, n_planes, "ann_query_indexed")
+    ix = segments.GenIndex.open(spark, path, "ANN")
+    n_planes = _ann_check_planes(ix, n_planes, "ann_query_indexed")
     qv = np.asarray(query_vec, dtype=np.float64)
     planes = _hyperplanes(len(query_vec), n_planes)
     qbits = [(1 if s else 0) for s in (planes @ qv) > 0]
@@ -565,10 +435,7 @@ def ann_query_indexed(spark, path: str, query_vec: list[float], k: int = 10,
             for f in flips:
                 bits[f] ^= 1
             probes.append("b" + "".join(map(str, bits)))
-    idx = (spark.read.parquet(path + "/vectors")
-           .filter(F.col("gen") <= committed)
-           .filter(F.col("bucket").isin(probes)))
-    idx = _ann_live(spark, path, committed, idx, id_col)
+    idx = ix.live("vectors", id_col, prune={"bucket": probes})
     return ann_bruteforce(idx, query_vec, k, id_col, emb_col)
 
 
@@ -641,6 +508,15 @@ def _assign_clusters(emb: DataFrame, cents: list[list[float]],
             .drop("sims"))
 
 
+def _ivf_probe(cents: list[list[float]], query_vec: list[float],
+               nprobe: int) -> list[int]:
+    """The ``nprobe`` clusters whose centroids are nearest the query."""
+    qv = np.asarray(query_vec, dtype=np.float64)
+    cm = np.asarray(cents, dtype=np.float64)
+    csim = (cm @ qv) / (np.linalg.norm(cm, axis=1) * np.linalg.norm(qv))
+    return [int(i) for i in np.argsort(-csim)[:nprobe]]
+
+
 def ann_ivf(emb: DataFrame, query_vec: list[float], k: int = 10,
             n_clusters: int = 16, nprobe: int = 4, iters: int = 2,
             id_col: str = "vec_id", emb_col: str = "embedding",
@@ -649,10 +525,7 @@ def ann_ivf(emb: DataFrame, query_vec: list[float], k: int = 10,
     nearest the query, exact cosine rescore inside them. ``nprobe ==
     n_clusters`` scans everything — exact by construction."""
     cents = centroids or ivf_centroids(emb, n_clusters, iters, id_col, emb_col)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    cm = np.asarray(cents, dtype=np.float64)
-    csim = (cm @ qv) / (np.linalg.norm(cm, axis=1) * np.linalg.norm(qv))
-    probe = [int(i) for i in np.argsort(-csim)[:nprobe]]
+    probe = _ivf_probe(cents, query_vec, nprobe)
     sub = (_assign_clusters(emb, cents, id_col, emb_col)
            .filter(F.col("cluster").isin(probe)))
     return ann_bruteforce(sub, query_vec, k, id_col, emb_col)
@@ -663,22 +536,15 @@ def build_ivf_index(emb: DataFrame, path: str, n_clusters: int = 16,
                     emb_col: str = "embedding") -> list[list[float]]:
     """Persist the IVF layout: vectors parquet PARTITIONED BY cluster id
     at ``{path}/vectors/gen=N/cluster=.../`` (generation-committed; grow
-    with ``update_ivf_index``), centroids alongside. Queries prune to
-    nprobe partitions at the scan. Returns the centroids."""
-    import json as _json
-    import shutil
-    from kgspark import segments
-    shutil.rmtree(path, ignore_errors=True)
+    with ``update_ivf_index``), centroids in the index metadata. Queries
+    prune to nprobe partitions at the scan. Returns the centroids."""
     cents = ivf_centroids(emb, n_clusters, iters, id_col, emb_col)
-    _ann_write_gen(
-        _assign_clusters(emb.select(id_col, emb_col), cents, id_col, emb_col),
-        path + "/vectors", 0, ["cluster"])
-    _ann_write_gen(_ids_sidecar(emb, id_col, DEFAULT_ID_BUCKETS),
-                   path + "/ids", 0, ["id_bucket"])
-    _meta_merge(path, id_buckets=DEFAULT_ID_BUCKETS)
-    with open(path + "/_centroids.json", "w") as f:
-        _json.dump(cents, f)
-    segments.commit_gen(path, 0)
+    ix = segments.GenIndex.create(emb.sparkSession, path,
+                                  {"vectors": ["cluster"]}, "ids",
+                                  DEFAULT_ID_BUCKETS, centroids=cents)
+    ix.append({"vectors": _assign_clusters(emb.select(id_col, emb_col),
+                                           cents, id_col, emb_col),
+               "ids": emb.select(F.col(id_col).alias("id"))})
     return cents
 
 
@@ -687,42 +553,13 @@ def update_ivf_index(emb: DataFrame, path: str, id_col: str = "vec_id",
     """Fold a delta batch into an existing IVF index: assign against the
     FROZEN centroids (the standard IVF add path — FAISS adds to a trained
     quantizer without retraining) and append as a new committed
-    generation; re-embedded ids tombstone their old generation. Watch
-    ``ivf_drift_metrics`` and run ``retrain_ivf_index`` when a
-    distribution-shifted delta degrades the quantizer fit. Returns the
-    new generation."""
-    import json as _json
-    from kgspark import segments
-    spark = emb.sparkSession
-    segments.finish_swap(path)
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed IVF index at {path}; "
-                         "run build_ivf_index first")
-    segments.clean_uncommitted(path, _ANN_PARTS)
-    dup = (emb.groupBy(id_col).agg(F.count(F.lit(1)).alias("c"))
-           .filter(F.col("c") > 1).first())
-    if dup is not None:
-        raise ValueError(f"update_ivf_index: duplicate id {dup[0]!r} "
-                         "in delta batch — one row per id per batch")
-    with open(path + "/_centroids.json") as f:
-        cents = _json.load(f)
-    id_buckets = int(_meta_read(path).get("id_buckets", DEFAULT_ID_BUCKETS))
-    new_gen = committed + 1
-    delta_ids = emb.select(F.col(id_col).alias("__new_id")).distinct()
-    live_ids = _ann_live_id_rows(spark, path, committed, id_col,
-                                 _delta_id_buckets(emb, id_col, id_buckets))
-    coll = (live_ids.join(F.broadcast(delta_ids),
-                          F.col(id_col) == F.col("__new_id"), "left_semi")
-            .select(F.col(id_col).alias("id"), F.col("gen").alias("dead_gen")))
-    _ann_write_gen(
-        _assign_clusters(emb.select(id_col, emb_col), cents, id_col, emb_col),
-        path + "/vectors", new_gen, ["cluster"])
-    _ann_write_gen(_ids_sidecar(emb, id_col, id_buckets),
-                   path + "/ids", new_gen, ["id_bucket"])
-    _ann_write_gen(coll, path + "/deleted", new_gen, [])
-    segments.commit_gen(path, new_gen)
-    return new_gen
+    generation; re-embedded ids tombstone their old generation (see
+    ``_update_vectors``). Watch ``ivf_drift_metrics`` and run
+    ``retrain_ivf_index`` when a distribution-shifted delta degrades the
+    quantizer fit. Returns the new generation."""
+    return _update_vectors(emb, path, "IVF", id_col, lambda ix: (
+        _assign_clusters(emb.select(id_col, emb_col), ix.meta["centroids"],
+                         id_col, emb_col)))
 
 
 def ann_ivf_indexed(spark, path: str, query_vec: list[float], k: int = 10,
@@ -732,21 +569,9 @@ def ann_ivf_indexed(spark, path: str, query_vec: list[float], k: int = 10,
     prunes at the parquet source; exact rescore inside the probed
     partitions. Committed-generation + tombstone semantics as
     ann_query_indexed."""
-    import json as _json
-    from kgspark import segments
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed IVF index at {path}")
-    with open(path + "/_centroids.json") as f:
-        cents = _json.load(f)
-    qv = np.asarray(query_vec, dtype=np.float64)
-    cm = np.asarray(cents, dtype=np.float64)
-    csim = (cm @ qv) / (np.linalg.norm(cm, axis=1) * np.linalg.norm(qv))
-    probe = [int(i) for i in np.argsort(-csim)[:nprobe]]
-    idx = (spark.read.parquet(path + "/vectors")
-           .filter(F.col("gen") <= committed)
-           .filter(F.col("cluster").isin(probe)))
-    idx = _ann_live(spark, path, committed, idx, id_col)
+    ix = segments.GenIndex.open(spark, path, "IVF")
+    probe = _ivf_probe(ix.meta["centroids"], query_vec, nprobe)
+    idx = ix.live("vectors", id_col, prune={"cluster": probe})
     return ann_bruteforce(idx, query_vec, k, id_col, emb_col)
 
 
@@ -760,23 +585,13 @@ def ivf_drift_metrics(spark, path: str, emb_col: str = "embedding",
     a visibly lower value for its generation — the trigger for
     ``retrain_ivf_index``. One column-pruned scan of vectors/, one k×d
     centroid broadcast, one k-row aggregate."""
-    import json as _json
-    from kgspark import segments
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed IVF index at {path}")
-    with open(path + "/_centroids.json") as f:
-        cents = _json.load(f)
-    rows = _ann_live(
-        spark, path, committed,
-        (spark.read.parquet(path + "/vectors")
-         .filter(F.col("gen") <= committed)), id_col)
+    ix = segments.GenIndex.open(spark, path, "IVF")
     carr = F.array(*[
         F.array(*[F.lit(float(x)) for x in c]).cast("array<double>")
-        for c in cents])
+        for c in ix.meta["centroids"]])
     sim = _cos_expr(F.col(emb_col).cast("array<double>"),
                     F.element_at(carr, F.col("cluster") + 1))
-    return (rows.withColumn("sim", sim)
+    return (ix.live("vectors", id_col).withColumn("sim", sim)
             .groupBy("gen")
             .agg(F.count(F.lit(1)).alias("n_vectors"),
                  F.avg("sim").alias("mean_centroid_sim"))
@@ -787,44 +602,21 @@ def retrain_ivf_index(spark, path: str, n_clusters: int = 16,
                       iters: int = 2, id_col: str = "vec_id",
                       emb_col: str = "embedding") -> list[list[float]]:
     """Re-train the coarse quantizer over the index's LIVE vectors and swap
-    the re-clustered index in under the segments compaction journal
-    (interrupt anywhere and the next writer's ``finish_swap`` completes
-    it). This is the recovery path for quantizer drift after
+    the re-clustered index in: a segments compaction whose rewrite
+    re-clusters (interrupt anywhere and the next writer's ``finish_swap``
+    completes it). This is the recovery path for quantizer drift after
     distribution-shifted deltas accumulated through the frozen-centroid
     ``update_ivf_index`` add path — the batch analog of FAISS re-training
-    an IVF quantizer. Also compacts: tombstones purge, generations
-    collapse to a fresh gen 0. Returns the new centroids."""
-    import json as _json
-    import shutil
-    from pathlib import Path as _P
-
-    from kgspark import segments
-    segments.finish_swap(path)
-    committed = segments.committed_gen(path)
-    if committed is None:
-        raise ValueError(f"no committed IVF index at {path}")
-    segments.clean_uncommitted(path, _ANN_PARTS)
-    staging = path + ".compact.staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    live = _ann_live(
-        spark, path, committed,
-        (spark.read.parquet(path + "/vectors")
-         .filter(F.col("gen") <= committed)), id_col) \
-        .select(id_col, emb_col).localCheckpoint()  # feeds iters+2 passes
+    an IVF quantizer. Tombstones purge, generations collapse to a fresh
+    gen 0. Returns the new centroids."""
+    ix = segments.GenIndex.open(spark, path, "IVF", write=True)
+    live = (ix.live("vectors", id_col).select(id_col, emb_col)
+            .localCheckpoint())  # feeds iters+2 passes
     cents = ivf_centroids(live, n_clusters, iters, id_col, emb_col)
-    _ann_write_gen(_assign_clusters(live, cents, id_col, emb_col),
-                   staging + "/vectors", 0, ["cluster"])
-    id_buckets = int(_meta_read(path).get("id_buckets", DEFAULT_ID_BUCKETS))
-    _ann_write_gen(_ids_sidecar(live, id_col, id_buckets),
-                   staging + "/ids", 0, ["id_bucket"])
-    meta = _P(path) / "_meta.json"
-    if meta.exists():
-        shutil.copy(meta, _P(staging) / "_meta.json")
-    with open(staging + "/_centroids.json", "w") as f:
-        _json.dump([list(map(float, c)) for c in cents], f)
-    segments.commit_gen(staging, 0)
-    segments.compact_swap(path, staging)
-    return [list(map(float, c)) for c in cents]
+    ix.compact({"vectors": _assign_clusters(live, cents, id_col, emb_col),
+                "ids": live.select(F.col(id_col).alias("id"))},
+               centroids=cents)
+    return cents
 
 
 def embedding_neardups(emb: DataFrame, threshold: float = 0.95,

@@ -322,13 +322,19 @@ def hybrid_search(df: DataFrame, text_col: str, emb_col: str, query: str,
     graph_data_operations.py:73-80). The caller owns index freshness: the
     index must cover exactly ``df[text_col]`` (same id space), maintained
     via ``update_fulltext_index``. Scores are float-exact vs the scan path
-    (test_bm25_indexed_matches_scan), so results are identical.
+    (test_bm25_indexed_matches_scan), so results are identical. The index
+    scores BM25 only, so a config with another ``fulltext_method`` raises
+    ``ValueError``.
 
     Scores are rounded to 9 decimals before rank assignment so rankings are
     reproducible across engines (float sum order differs between Spark
     partial aggregation and single-process oracles)."""
     qv = search_text_query(query)
     if fulltext_index_path is not None:
+        if config.fulltext_method != "bm25":
+            raise ValueError(
+                "hybrid_search: fulltext_index_path is a BM25 index, but "
+                f"config.fulltext_method is {config.fulltext_method!r}")
         ft = bm25_query_indexed(df.sparkSession, fulltext_index_path, query,
                                 config.limit * 2, group_ids)
     elif config.fulltext_method == "bm25":

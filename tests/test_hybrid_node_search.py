@@ -121,6 +121,16 @@ def test_hybrid_search_indexed_fulltext_parity(spark, tmp_path):
         indexed = ks.hybrid_search(nodes, "name", "name_embedding", q,
                                    fulltext_index_path=idx).collect()
         assert indexed == scan, q
+    # the index scores BM25 only: a config asking for another fulltext
+    # method is refused, not silently answered with BM25
+    import dataclasses
+
+    import pytest
+    tf_config = dataclasses.replace(ks.EDGE_HYBRID_SEARCH_RRF,
+                                    fulltext_method="tf")
+    with pytest.raises(ValueError, match="fulltext_method is 'tf'"):
+        ks.hybrid_search(nodes, "name", "name_embedding", "epsilon",
+                         config=tf_config, fulltext_index_path=idx)
 
 
 def test_hybrid_node_search_indexed_fulltext_parity(spark, tmp_path):

@@ -4,9 +4,8 @@ and the heaviest stages (with task-skew ratio).
 Usage: python tools/joblog_report.py <eventlog-file-or-dir> [top_n_stages]
            [start_ms end_ms]
 
-With the optional epoch-ms window (kgjob_once prints one per timed run),
-only jobs submitted inside the window are considered — slicing one timed
-run out of a multi-run app log.
+With the optional epoch-ms window, only jobs submitted inside the window
+are considered — slicing one timed run out of a multi-run app log.
 """
 from __future__ import annotations
 
