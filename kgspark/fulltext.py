@@ -106,18 +106,11 @@ def bm25_search(df: DataFrame, text_col: str, query: str, limit: int = 20,
 
 
 # ---------------------------------------------------------------------------
-# Persisted fulltext index — the read-side twin of datapipe.build_ann_index.
-#
-# The reference's fulltext search runs against Lucene indexes created ONCE
-# (build_indices_and_constraints, /root/reference/graphiti_core/utils/
-# maintenance/graph_data_operations.py:73-80) and queried per-search
-# (search_utils.py:143-194). ``bm25_search`` above recomputes the corpus
-# doc-length table and term frequencies on every query; the index tokenizes
-# once, and each update tokenizes only its delta batch. Postings are
-# partitioned by term_bucket = md5(term) % num_buckets, so a query with ≤32
-# terms prunes to ≤32 partitions, and carry dlen (and group_id) so scoring
-# joins nothing corpus-sized. On-disk layout, generations, tombstones and
-# compaction: the kgspark.segments module docstring.
+# Persisted fulltext index — the read-side twin of datapipe.build_ann_index:
+# tokenized once, grown per delta batch, queried by term-bucket partition
+# (the reference queries Lucene indexes built once, graph_data_operations.py
+# :73-80). On-disk layout, generations, tombstones and compaction: the
+# kgspark.segments module docstring.
 # ---------------------------------------------------------------------------
 
 def term_bucket(term: str, num_buckets: int) -> int:

@@ -26,7 +26,10 @@ the current layout version is refused with a "rebuild required"
 ``ValueError`` by every reader and writer. The families:
 
 - BM25 (``fulltext``): ``postings`` (term, id, tf, dlen[, group_id]) by
-  ``term_bucket``; ``docs`` (id, dlen[, group_id]) as the id part;
+  ``term_bucket = md5(term) % num_buckets``, so a query prunes to its
+  terms' partitions, with dlen and group_id denormalized so that scoring
+  joins nothing corpus-sized; ``docs`` (id, dlen[, group_id]) as the id
+  part;
   ``stats`` one cumulative (n_docs, total_len, avgdl) row per generation;
   ``group_stats`` per-group (n_docs, total_len) deltas when the corpus has
   a ``group_id``. Parameters: ``num_buckets``.
@@ -233,8 +236,10 @@ class GenIndex:
     def open(cls, spark, root: str, kind: str,
              write: bool = False) -> GenIndex:
         """Open the committed index at ``root``; ``kind`` names the family
-        in errors. A writer (``write=True``) first finishes an interrupted
-        compaction swap and removes uncommitted generations."""
+        in errors. Raises ``ValueError`` when there is no committed index or
+        its layout is not ``LAYOUT_VERSION`` ("rebuild required"). A writer
+        (``write=True``) first finishes an interrupted compaction swap and
+        removes uncommitted generations."""
         if write:
             finish_swap(root)
         committed = committed_gen(root)
@@ -259,8 +264,8 @@ class GenIndex:
 
     def live(self, part: str, id_col: str = "id",
              prune: dict | None = None) -> DataFrame:
-        """Live rows of ``part``: committed generations minus tombstones.
-        ``prune`` maps partition columns to the values to keep, so the scan
+        """Live rows of ``part``: committed generations minus tombstones,
+        matched on the part's ``id_col``. ``prune`` maps partition columns to the values to keep, so the scan
         reads only those partitions. Tombstones are broadcast: their count
         is the number of re-ingested ids since the last compaction, not the
         corpus size."""
@@ -298,7 +303,8 @@ class GenIndex:
                 .join(F.broadcast(new_ids),
                       F.col("id") == F.col("__new_id"), "left_semi"))
 
-    def check_unique(self, df: DataFrame, id_col: str, op: str) -> None:
+    @staticmethod
+    def check_unique(df: DataFrame, id_col: str, op: str) -> None:
         dup = (df.groupBy(id_col).agg(F.count(F.lit(1)).alias("c"))
                .filter(F.col("c") > 1).first())
         if dup is not None:
