@@ -6,7 +6,7 @@ Default mode (what the round driver runs): headline queries at
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
 
 ``--scaling`` mode (north rule evidence): runs the same KG-construction job
-at two parallelism levels (local[8] vs local[32]) in separate processes on
+at local[N/4] vs local[N] (N = host cores) in separate processes on
 identical input and reports throughput at both + scaling efficiency into
 BENCH/BASELINE.md. A real cluster is unavailable in this sandbox; two
 parallelism levels on the same input are the sanctioned stand-in
@@ -24,16 +24,22 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from kgspark.session import host_cpus  # noqa: E402
+
 KG_BENCH_PAGES = int(os.environ.get("KGSPARK_BENCH_PAGES", "40000"))
 # --scaling corpus: big + rich enough that parallel work dominates fixed
 # overhead (JIT, python-worker spinup, per-job scheduling)
 SCALING_PAGES = int(os.environ.get("KGSPARK_SCALING_PAGES", "400000"))
 SCALING_RICHNESS = int(os.environ.get("KGSPARK_SCALING_RICHNESS", "3"))
-# N and 4N parallelism levels. Default 8,32 (the brief's suggested pairing),
-# with each child PINNED to exactly N host cores (taskset) — see below.
-SCALING_LEVELS = tuple(int(x) for x in
-                       os.environ.get("KGSPARK_SCALING_LEVELS", "8,32").split(","))
-# Core pinning (default on): an N-core executor runs its JVM task threads,
+# N and 4N parallelism levels: a quarter of the host's cores and all of
+# them, unless KGSPARK_SCALING_LEVELS names two. Each child is PINNED to
+# exactly N host cores (taskset) — see _child_cmd.
+SCALING_LEVELS = tuple(int(x) for x in os.environ.get(
+    "KGSPARK_SCALING_LEVELS",
+    f"{max(1, host_cpus() // 4)},{host_cpus()}").split(","))
+
+
+# Core pinning: an N-core executor runs its JVM task threads,
 # GC, JIT, AND Python workers inside those N cores. Unpinned local[N] on a
 # 32-core host lets the low level borrow the whole machine for GC/JIT/
 # Arrow workers (local[2] gets 32 GC threads), subsidizing it and
@@ -42,12 +48,9 @@ SCALING_LEVELS = tuple(int(x) for x in
 # oversubscription ratio — the faithful single-box stand-in for an N-core
 # executor. (Verified: under taskset the JVM ergonomics follow the
 # affinity mask, e.g. ParallelGCThreads drops to N.)
-PIN_CORES = os.environ.get("KGSPARK_PIN_CORES", "1") == "1"
-
-
 def _child_cmd(flag: str, cpus: int) -> list[str]:
     cmd = [sys.executable, __file__, flag, str(cpus)]
-    if PIN_CORES and cpus < (os.cpu_count() or cpus):
+    if cpus < (os.cpu_count() or cpus):
         cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
     return cmd
 
@@ -112,7 +115,6 @@ def kg_job(spark, n_pages: int, richness: int = 1) -> dict:
 
 def run_default() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from kgspark.session import host_cpus
     cpus = host_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = _spark(cpus)
@@ -288,7 +290,7 @@ def run_scaling() -> None:
     # efficiency of scaling parallelism 4x: throughput ratio / core ratio
     eff = round((t_hi / t_lo) / (hi / lo), 3)
     out = {f"local{lo}": results[lo], f"local{hi}": results[hi],
-           "levels": [lo, hi], "pinned": PIN_CORES,
+           "levels": [lo, hi], "pinned": True,
            "speedup": round(t_hi / t_lo, 2), "scaling_efficiency": eff,
            "pages": SCALING_PAGES, "richness": SCALING_RICHNESS}
     print(json.dumps(out, indent=2))

@@ -10,28 +10,16 @@ the FIRST occurrence by (warc_ts, url); provenance episodes are set-merged
 win (resolve_extracted_edge overwrites valid_at/invalid_at when the current
 episode extracted dates — edge_operations.py:280-284).
 
-Scale shape: hub facts (the same assertion crawled from tens of thousands of
-pages) skew a naive groupBy — one reducer would absorb the whole duplicate
-class. Two plans share one aggregate definition:
-
-- single-phase (default): ONE exchange keyed on the duplicate class; Spark's
-  map-side partial aggregation is the combiner, so a hub class reaches its
-  reducer as one partial ROW per map task. Note the row count is
-  O(map_tasks) but the episodes PAYLOAD is not: partial collect_set states
-  are uncapped (the smallest-1000 slice applies after the final merge —
-  it must, a per-partial cap is only exact per GROUP, see the salted
-  phase), so a class crawled from k distinct urls ships all k urls into
-  one reducer. Right whenever per-class duplicate factors are moderate
-  (the measured regime here: ~8 occurrences/class; at 1.6M bench pages the
-  hottest classes reach ~10^3-10^4 urls — single-digit MB, still fine).
-- two-phase salted (``n_salts>0``): an explicit provenance-url salt spreads
-  one class over ``n_salts`` reducers, each of which caps its bucket to the
-  smallest-1000 (exact: every url in the global smallest-1000 is in its
-  bucket's smallest-1000), before a second bounded merge exchange
-  (≤ n_salts×1000 urls/class). The north-rule hub treatment once single
-  hub classes reach 10^5+ distinct urls (10^12-doc corpora) — flip it via
-  ``KGSPARK_DEDUP_SALTS`` on the full pipeline. Benched at bench scale the
-  extra exchange LOSES (test_scale_shapes), so it stays opt-in.
+Plan: ONE exchange keyed on the duplicate class. Spark's map-side partial
+aggregation is the combiner, so a hub class (the same assertion crawled from
+many pages) reaches its reducer as one partial row per map task. The
+episodes payload is not bounded that way: partial collect_set states are
+uncapped, because the smallest-``max_provenance`` slice is exact only after
+the final merge, so a class crawled from k distinct urls ships all k urls
+into one reducer. A two-phase salted merge (url salt, per-bucket cap, second
+exchange) bounds that payload but lost to this plan even on a hub: 4M
+triples with one ~1M-url class at local[4] took 8.3-8.7 s single-phase and
+11.1 s with 16 salts, for the same result.
 
 min/max merge losslessly; provenance merges as set-union then is CAPPED at
 ``max_provenance`` urls (smallest-first, deterministic) with the exact total
@@ -45,32 +33,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-N_SALTS = 16
 MAX_PROVENANCE = 1000
 
 KEY = ["group_id", "src_uuid", "predicate", "dst_uuid", "norm_fact"]
 
 
-def _class_aggs(max_provenance: int) -> list:
-    """The per-duplicate-class aggregate set. Every aggregate is an
-    associative-commutative merge, so the same list serves both the
-    single-phase plan and the salted partial phase."""
-    return [
-        F.min(F.struct(F.col("warc_ts"), F.col("url"),
-                       F.col("fact"))).alias("first_occ"),
-        F.max(F.when(F.col("valid_at_explicit").isNotNull(),
-                     F.struct("warc_ts", "url", "valid_at_explicit"))).alias("last_valid"),
-        F.max(F.when(F.col("invalid_at_explicit").isNotNull(),
-                     F.struct("warc_ts", "url", "invalid_at_explicit"))).alias("last_invalid"),
-        F.slice(F.array_sort(F.collect_set("url")), 1,
-                max_provenance).alias("episodes"),
-        F.min("warc_ts").alias("created_at"),
-        F.count(F.lit(1)).alias("n_occurrences"),
-    ]
+def dedup_edges(triples: DataFrame,
+                max_provenance: int = MAX_PROVENANCE) -> DataFrame:
+    """triples: group_id, src_uuid, dst_uuid, predicate, fact, norm_fact,
+    url, warc_ts, valid_at_explicit, invalid_at_explicit.
 
-
-def _finalize(classes: DataFrame) -> DataFrame:
-    """Project the merged per-class aggregate row to the edge schema."""
+    Returns one edge row per duplicate-class with merged provenance.
+    """
+    classes = (
+        triples
+        .filter(F.col("src_uuid") != F.col("dst_uuid"))  # self-loop drop (bulk_utils.py:385-386)
+        .groupBy(*KEY)
+        .agg(
+            F.min(F.struct(F.col("warc_ts"), F.col("url"),
+                           F.col("fact"))).alias("first_occ"),
+            F.max(F.when(F.col("valid_at_explicit").isNotNull(),
+                         F.struct("warc_ts", "url", "valid_at_explicit"))).alias("last_valid"),
+            F.max(F.when(F.col("invalid_at_explicit").isNotNull(),
+                         F.struct("warc_ts", "url", "invalid_at_explicit"))).alias("last_invalid"),
+            F.slice(F.array_sort(F.collect_set("url")), 1,
+                    max_provenance).alias("episodes"),
+            F.min("warc_ts").alias("created_at"),
+            F.count(F.lit(1)).alias("n_occurrences"),
+        )
+    )
     return classes.select(
         *KEY,
         F.col("first_occ.fact").alias("fact"),
@@ -84,39 +75,3 @@ def _finalize(classes: DataFrame) -> DataFrame:
     ).withColumn("uuid", F.md5(F.concat_ws(
         "|", F.lit("edge"), F.col("group_id"), F.col("src_uuid"),
         F.col("predicate"), F.col("dst_uuid"), F.col("norm_fact"))))
-
-
-def dedup_edges(triples: DataFrame, n_salts: int = 0,
-                max_provenance: int = MAX_PROVENANCE) -> DataFrame:
-    """triples: group_id, src_uuid, dst_uuid, predicate, fact, norm_fact,
-    url, warc_ts, valid_at_explicit, invalid_at_explicit.
-
-    Returns one edge row per duplicate-class with merged provenance.
-    ``n_salts=0`` (default) = single-phase plan; ``n_salts>0`` = explicit
-    two-phase hub salting (see module docstring for when each wins).
-    """
-    base = triples.filter(F.col("src_uuid") != F.col("dst_uuid"))  # self-loop drop (bulk_utils.py:385-386)
-
-    if n_salts == 0:
-        return _finalize(base.groupBy(*KEY).agg(*_class_aggs(max_provenance)))
-
-    partial = (
-        base
-        .withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-        .groupBy(*KEY, "salt")
-        .agg(*_class_aggs(max_provenance))
-    )
-    merged = (
-        partial
-        .groupBy(*KEY)
-        .agg(
-            F.min("first_occ").alias("first_occ"),
-            F.max("last_valid").alias("last_valid"),
-            F.max("last_invalid").alias("last_invalid"),
-            F.slice(F.array_sort(F.array_distinct(F.flatten(F.collect_list("episodes")))),
-                    1, max_provenance).alias("episodes"),
-            F.min("created_at").alias("created_at"),
-            F.sum("n_occurrences").alias("n_occurrences"),
-        )
-    )
-    return _finalize(merged)

@@ -100,43 +100,19 @@ def build_graph(pages: DataFrame, batch_ts: datetime | None = None,
             .select("url")
         )
 
-    # stage 1: extraction (vectorized Arrow UDFs). Default is the SPLIT
-    # two-pass path: mentions and triples are each re-derived from the page
-    # scan and nothing is materialized — Spark overlaps the two scans and
-    # the parquet read is cheap. KGSPARK_FUSED_EXTRACTION=1 switches to a
-    # single fused mapInPandas stage (textcore.extract_page) that parses
-    # each page once and materializes the event set; ABAB-benched at
-    # local[8]/400k pages the fused path LOST (65.4s vs 55.6s and 78.5s vs
-    # 36.9s) — the localCheckpoint materialization + union-schema row
-    # building costs more than the extra regex passes it saves — so it
-    # stays an opt-in experiment knob.
-    import os
-    _mentions_ckpted = False
-    if os.environ.get("KGSPARK_FUSED_EXTRACTION", "0") == "1":
-        events = udfs.extract_page_events(
-            pages, entity_types, json_possible=json_possible).localCheckpoint()
-        mentions_raw, triples_raw = udfs.split_events(events)
-    else:
-        mentions_raw = udfs.extract_mentions(pages, entity_types,
-                                             json_possible=json_possible)
-        triples_raw = udfs.extract_triples(pages)
-        if os.environ.get("KGSPARK_CKPT_MENTIONS", "1") == "1":
-            # LAZY checkpoint: mentions_raw has THREE consumers (the
-            # entities aggregate, the stage-4 mentions table, and the
-            # typed-attribute path). The eager entities checkpoint below
-            # is the first action and materializes it, so a multi-action
-            # caller (write_tables' per-table writes, kg_oracle) reuses
-            # the narrow materialized rows instead of re-running the
-            # dominant mention-extraction Python scan per table — the
-            # event-log attribution showed 3 full-corpus extraction scans
-            # per 6-table job where 2 are expected. Single-action builds
-            # (bench edges.count) pay only the block-manager write/read
-            # of the narrow rows, A/B-measured as noise-level.
-            mentions_raw = mentions_raw.localCheckpoint(eager=False)
-            _mentions_ckpted = True
+    # stage 1: extraction (vectorized Arrow UDFs): mentions and triples are
+    # two scans of the pages. mentions_raw gets a LAZY checkpoint because
+    # it has three consumers (the entities aggregate, the stage-4 mentions
+    # table and the typed-attribute path): the eager entities checkpoint
+    # below is the first action and materializes it, so a multi-action
+    # caller (write_tables' per-table writes, kg_oracle) reuses the narrow
+    # rows instead of re-running the mention-extraction Python scan per
+    # table. A single-action build pays only the block-manager write/read.
+    mentions_raw = udfs.extract_mentions(
+        pages, entity_types, json_possible=json_possible
+    ).localCheckpoint(eager=False)
+    triples_raw = udfs.extract_triples(pages)
     if expose_intermediates:
-        if not _mentions_ckpted:
-            mentions_raw = mentions_raw.localCheckpoint(eager=False)
         triples_raw = triples_raw.localCheckpoint(eager=False)
         out["_mentions_raw"] = mentions_raw
         out["_triples_raw"] = triples_raw
@@ -355,12 +331,7 @@ def build_graph(pages: DataFrame, batch_ts: datetime | None = None,
     # lazy checkpoint for the same reason as `mapping`: the edges,
     # edge_invalidations, and episodes table jobs would otherwise each
     # re-run the triple extraction scan + entity join + dedup exchange.
-    # KGSPARK_DEDUP_SALTS>0 flips to the two-phase salted provenance merge
-    # (bounded per-reducer episode payload — the hub treatment once single
-    # duplicate classes reach 10^5+ distinct urls; see dedup.py docstring)
-    dedup_salts = int(os.environ.get("KGSPARK_DEDUP_SALTS", "0"))
-    edges_merged = dedup.dedup_edges(triples_canon, n_salts=dedup_salts) \
-        .localCheckpoint(eager=False)
+    edges_merged = dedup.dedup_edges(triples_canon).localCheckpoint(eager=False)
     edges_resolved, invalidations = temporal.temporal_pass(edges_merged, batch_ts)
 
     if compute_embeddings:

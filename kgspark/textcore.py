@@ -181,7 +181,7 @@ def split_sentences(text: str) -> list[str]:
 
 def _scan_names(sent: str):
     """Yield (trimmed_name, match_start) for every Title-Case mention in one
-    sentence — the shared inner loop of extract_mentions / extract_page.
+    sentence — the inner loop of extract_mentions.
     The start is the UNTRIMMED match start (spec behavior: downstream
     between-text slicing uses trimmed name length from the untrimmed start).
     """
@@ -561,84 +561,6 @@ def extract_triples(text: str, ref_ts: datetime, _cache: dict | None = None) -> 
 
 
 _LEADING_THE_RE = re.compile(r"^(?:the\s+)")
-
-
-def extract_page(text: str, ref_ts: datetime,
-                 classifier=None) -> tuple[list[Mention], list[Triple]]:
-    """Single-scan fusion of ``extract_mentions`` + ``extract_triples``.
-
-    Bit-identical outputs to calling the two spec functions separately
-    (asserted by tests/test_udf_parity.py::test_extract_page_fusion_parity),
-    built from ONE Title-Case regex pass per sentence instead of three:
-    the spec pair scans each sentence once for the page mention list and
-    once more inside extract_triples' per-sentence re-detection. Works
-    because the lowercase speaker handle is invisible to _MENTION_RE, so
-    scanning the speaker-stripped body yields the same names as scanning
-    the full sentence (starts shifted by the prefix length). parse_dates is
-    hoisted to once per sentence (it is a function of the body only).
-    Exotic bodies (embedded '.', re-strippable whitespace) fall back to the
-    spec function for that sentence.
-    """
-    if classifier is None:
-        classifier = classify_name
-    # same entry cleaning as the dispatch pair (clean_input below) — keeps
-    # the bit-identity contract when the raw text carries control chars
-    text = clean_input(text)
-    mentions: list[Mention] = []
-    triples: list[Triple] = []
-    seen: set[str] = set()
-    offset = 0
-    for sent in split_sentences(text):
-        spk = _SPEAKER_RE.match(sent)
-        if spk:
-            h = spk.group(1)
-            if h not in seen:
-                seen.add(h)
-                mentions.append(Mention(h, "Person", offset))
-        body = _SPEAKER_RE.sub("", sent)
-        prefix = len(sent) - len(body)
-        scanned = list(_scan_names(body))
-        for name, start in scanned:
-            if name not in seen:
-                seen.add(name)
-                mentions.append(Mention(name, classifier(name),
-                                        offset + prefix + start))
-        offset += len(sent) + 2
-
-        # per-sentence mention list exactly as extract_triples builds it via
-        # extract_mentions(body): fresh seen-set, speaker branch on body.
-        # Labels are never read on this path, so they stay "".
-        if "." in body or body != body.strip():
-            sent_mentions = extract_mentions(body)  # exact fallback
-        else:
-            sent_mentions = []
-            seen2: set[str] = set()
-            spk2 = _SPEAKER_RE.match(body)
-            if spk2:
-                h2 = spk2.group(1)
-                seen2.add(h2)
-                sent_mentions.append(Mention(h2, "Person", 0))
-            for name, start in scanned:
-                if name not in seen2:
-                    seen2.add(name)
-                    sent_mentions.append(Mention(name, "", start))
-        if len(sent_mentions) < 2:
-            continue
-        by_start = sorted(sent_mentions, key=lambda m: m.start)
-        dates = None
-        for a, b in zip(by_start, by_start[1:]):
-            between = body[a.start + len(a.name): b.start].strip()
-            between = _LEADING_THE_RE.sub("", between)
-            pred = _VERB_MAP.get(between)
-            if pred is None:
-                continue
-            if a.name == b.name:
-                continue  # self-loop drop (bulk_utils.py:385-386)
-            if dates is None:
-                dates = parse_dates(body, ref_ts)
-            triples.append(Triple(a.name, pred, b.name, sent.strip() + ".",
-                                  dates[0], dates[1], dates[2]))
-    return mentions, triples
 
 
 # ---------------------------------------------------------------------------

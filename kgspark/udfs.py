@@ -7,9 +7,6 @@ Python UDFs anywhere in the pipeline (BASELINE.json input_hint).
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -171,10 +168,8 @@ def extract_triples(pages: DataFrame) -> DataFrame:
         # sentence -> sentence_protos memo (ref_ts-independent by
         # construction — textcore.parse_dates_structural): repeated
         # boilerplate sentences skip the regex scan entirely. Same
-        # lifetime/bound as _memoized: one Arrow task. KGSPARK_SENT_CACHE=0
-        # disables it (A/B knob).
-        sent_cache: dict | None = (
-            {} if os.environ.get("KGSPARK_SENT_CACHE", "1") == "1" else None)
+        # lifetime/bound as _memoized: one Arrow task.
+        sent_cache: dict = {}
         for pdf in batches:
             tr_all = [
                 tc.extract_triples_for(src, text, ts.to_pydatetime(), sent_cache)
@@ -206,96 +201,6 @@ def extract_triples(pages: DataFrame) -> DataFrame:
 
     return pages.select("url", "group_id", "warc_ts", "text",
                         "source").mapInPandas(run, TRIPLES_DDL)
-
-
-# ---------------------------------------------------------------------------
-# Fused extraction: one page scan emits BOTH mentions and triples
-# (textcore.extract_page; row kind 'm' | 't')
-# ---------------------------------------------------------------------------
-
-EVENTS_DDL = ("kind string, url string, group_id string, warc_ts timestamp, "
-              "name string, label string, norm_name string, "
-              "is_speaker boolean, attrs string, "
-              "subject string, predicate string, object string, fact string, "
-              "valid_at_explicit timestamp, invalid_at_explicit timestamp, "
-              "explicit_dates boolean, norm_fact string, "
-              "norm_subj string, norm_obj string")
-
-_M_COLS = ["url", "group_id", "warc_ts", "name", "label", "norm_name",
-           "is_speaker", "attrs"]
-_T_COLS = ["url", "group_id", "warc_ts", "subject", "predicate", "object",
-           "fact", "valid_at_explicit", "invalid_at_explicit",
-           "explicit_dates", "norm_fact", "norm_subj", "norm_obj"]
-
-
-def extract_page_events(pages: DataFrame, entity_types=None,
-                        json_possible: bool | None = None) -> DataFrame:
-    """One mapInPandas stage over the page scan producing the union of
-    MENTIONS_DDL rows (kind='m') and TRIPLES_DDL rows (kind='t') — the
-    pipeline materializes this once instead of scanning + parsing every page
-    twice (extract_triples re-detects mentions per sentence, so the split
-    UDFs cost ~3 regex passes per page; this costs one —
-    textcore.extract_page)."""
-    from kgspark.entity_types import (extract_attributes, has_extraction,
-                                      make_classifier)
-    classifier = make_classifier(entity_types)
-    if json_possible is None:
-        json_possible = "source" in pages.columns
-    extract_attrs = has_extraction(entity_types, json_possible=json_possible)
-    pages = _with_source(pages)
-
-    def run(batches):
-        import json as _json
-        norm = _memoized(tc.normalize_name)
-        normf = _memoized(tc.normalize_fact)
-        for pdf in batches:
-            rows = []
-            for url, gid, ts, text, src in zip(pdf["url"], pdf["group_id"],
-                                               pdf["warc_ts"], pdf["text"],
-                                               pdf["source"]):
-                if src == "text":
-                    ms, tps = tc.extract_page(text, ts.to_pydatetime(),
-                                              classifier)
-                else:
-                    # message/json episodes are cheap to parse (no fused
-                    # single-scan needed) — dispatch to the spec pair
-                    ms = tc.extract_mentions_for(src, text, classifier)
-                    tps = tc.extract_triples_for(src, text,
-                                                 ts.to_pydatetime())
-                amap = (extract_attributes(entity_types, src,
-                                           tc.clean_input(text), ms)
-                        if extract_attrs else {})
-                for m in ms:
-                    a = amap.get(m.name)
-                    rows.append(("m", url, gid, ts, m.name, m.label,
-                                 norm(m.name), m.speaker,
-                                 _json.dumps(a) if a else None,
-                                 None, None, None,
-                                 None, None, None, None, None, None, None))
-                for t in tps:
-                    rows.append(("t", url, gid, ts, None, None, None, None,
-                                 None,
-                                 t.subject, t.predicate, t.object, t.fact,
-                                 t.valid_at, t.invalid_at, t.explicit_dates,
-                                 normf(t.fact),
-                                 norm(t.subject), norm(t.object)))
-            if rows:  # see extract_mentions: empty-frame dtype vs Arrow cast
-                yield pd.DataFrame(rows, columns=[
-                    "kind", "url", "group_id", "warc_ts", "name", "label",
-                    "norm_name", "is_speaker", "attrs", "subject",
-                    "predicate", "object", "fact", "valid_at_explicit",
-                    "invalid_at_explicit", "explicit_dates", "norm_fact",
-                    "norm_subj", "norm_obj"])
-
-    return pages.select("url", "group_id", "warc_ts", "text", "source") \
-        .mapInPandas(run, EVENTS_DDL)
-
-
-def split_events(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """events -> (mentions_raw, triples_raw) with the split-UDF schemas."""
-    mentions = events.filter(F.col("kind") == "m").select(*_M_COLS)
-    triples = events.filter(F.col("kind") == "t").select(*_T_COLS)
-    return mentions, triples
 
 
 # ---------------------------------------------------------------------------
@@ -484,22 +389,6 @@ def entity_band_keys(entities: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return entities.select("group_id", "norm_name", "name").mapInPandas(run, BANDS_DDL)
-
-
-# ---------------------------------------------------------------------------
-# Pair scoring (the dedup decision, node_operations.py:268-415 analog)
-# ---------------------------------------------------------------------------
-
-def should_link_udf():
-    """Lazily-built pandas UDF (needs an active session): boolean
-    should_link(name_a, name_b) — kept for ad-hoc parity checks; the
-    pipeline itself scores pairs JVM-side (kgspark/linking.py)."""
-
-    @F.pandas_udf("boolean")
-    def _udf(name_a: pd.Series, name_b: pd.Series) -> pd.Series:
-        return pd.Series([tc.should_link(a, b) for a, b in zip(name_a, name_b)])
-
-    return _udf
 
 
 # JVM-side normalized name (must match textcore.normalize_name exactly;

@@ -165,13 +165,14 @@ def test_temporal_same_group_run_skipped(spark):
     assert caused == {"e1": "e3", "e2": "e3"}
 
 
-def _triples_df(spark):
+def _triples_df(spark, extra=()):
     base = datetime(2024, 1, 1)
     rows = []
     for i in range(300):
         rows.append((f"g{i % 3}", f"s{i % 20:02d}", "WORKS_FOR", f"d{i % 7}",
                      f"fact {i % 40}", f"nf {i % 40}", f"u{i:03d}",
                      base + timedelta(hours=i), None, None))
+    rows.extend(extra)
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=[
             "group_id", "src_uuid", "predicate", "dst_uuid", "fact",
@@ -183,49 +184,39 @@ def _triples_df(spark):
                 "invalid_at_explicit timestamp"))
 
 
-def test_dedup_single_phase_plan_and_salted_parity(spark):
-    """Default dedup must be ONE exchange (hash agg + map-side combine —
-    the double-shuffle salted plan cost 4-5x at local[32]); the n_salts>0
-    hub knob must produce identical rows through its two exchanges."""
+def test_dedup_single_phase_plan(spark):
+    """Dedup is ONE exchange (hash agg + map-side combine). A hub class
+    restated from more distinct urls than MAX_PROVENANCE keeps the smallest
+    urls, the exact occurrence count, and the fact and created_at of its
+    first (warc_ts, url) row."""
     from kgspark import dedup
 
-    t = _triples_df(spark)
-    plan1 = dedup.dedup_edges(t)._jdf.queryExecution().executedPlan().toString()
-    assert plan1.count("Exchange hashpartitioning") == 1
-    assert "ObjectHashAggregate" in plan1
-    plan2 = dedup.dedup_edges(t, n_salts=8)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan2.count("Exchange hashpartitioning") == 2
+    rng = random.Random(11)
+    base = datetime(2024, 1, 1)
+    n_hub = 2500
+    hub = [("gh", "hub-src", "WORKS_FOR", "hub-dst", f"hub fact {i}",
+            "hub nf", f"hub-u{i:05d}",
+            base + timedelta(minutes=rng.randrange(10 * n_hub)), None, None)
+           for i in range(n_hub)]
+    rng.shuffle(hub)
+    # two rows tie on the earliest warc_ts: the smaller url must win
+    first_ts = base - timedelta(days=1)
+    for k in (0, 1):
+        hub[k] = hub[k][:7] + (first_ts, None, None)
+    first = min(hub, key=lambda r: (r[7], r[6]))
 
-    def freeze(rows):
-        return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
-                for r in rows}
+    t = _triples_df(spark, hub)
+    plan = dedup.dedup_edges(t)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "ObjectHashAggregate" in plan
 
-    a = freeze(dedup.dedup_edges(t).collect())
-    b = freeze(dedup.dedup_edges(t, n_salts=8).collect())
-    assert a == b and len(a) > 50
-
-
-def test_pipeline_dedup_salts_env_knob(spark, monkeypatch):
-    """KGSPARK_DEDUP_SALTS routes the pipeline's provenance merge through
-    the two-phase salted plan (the 10^5+-urls-per-class hub treatment) and
-    the result is identical to the default single-phase plan."""
-    from kgspark import pipeline
-    from kgspark.datagen import pages_spark
-
-    pages = pages_spark(spark, 60, partitions=2)
-    base = pipeline.build_graph(pages, BATCH_TS, check_text=False,
-                                compute_embeddings=False)["edges"]
-
-    def freeze(rows):
-        return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
-                for r in rows}
-
-    monkeypatch.setenv("KGSPARK_DEDUP_SALTS", "4")
-    salted = pipeline.build_graph(pages, BATCH_TS, check_text=False,
-                                  compute_embeddings=False)["edges"]
-    a, b = freeze(base.collect()), freeze(salted.collect())
-    assert a == b and len(a) > 10
+    rows = dedup.dedup_edges(t).collect()
+    assert len(rows) > 50
+    (got,) = [r for r in rows if r["group_id"] == "gh"]
+    assert got["episodes"] == sorted(r[6] for r in hub)[:dedup.MAX_PROVENANCE]
+    assert got["n_occurrences"] == n_hub
+    assert got["fact"] == first[4]
+    assert got["created_at"] == first_ts
 
 
 def test_cc_auto_null_group_rows_survive(spark):

@@ -298,12 +298,6 @@ def test_clean_input_reference_cases():
     dirty = "Priya​ Sharma likes Glowco"
     ms = tc.extract_mentions_for("text", dirty)
     assert any(m.name == "Priya Sharma" for m in ms)
-    # the fused single-scan extractor cleans at entry too (bit-identity
-    # with the spec pair holds on dirty text)
-    from datetime import datetime
-    ref = datetime(2024, 6, 1)
-    fm, ft = tc.extract_page(dirty, ref)
-    assert fm == ms and ft == tc.extract_triples_for("text", dirty, ref)
 
 
 def test_sentence_cache_parity_across_ref_ts():

@@ -60,48 +60,6 @@ def test_band_key_parity(spark):
         assert set(by_name[tc.normalize_name(n)]) == set(tc.minhash_band_keys(n))
 
 
-def test_extract_page_fusion_parity():
-    """textcore.extract_page (single-scan fusion) must be bit-identical to
-    the spec pair (extract_mentions, extract_triples) — names, labels,
-    triple tuples, dates, and fact strings — across a generated corpus."""
-    from datetime import datetime
-
-    from kgspark.datagen import pages_pandas
-
-    pdf = pages_pandas(400, richness=3)
-    checked_m = checked_t = 0
-    for text, ts in zip(pdf["text"], pdf["warc_ts"]):
-        ref = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-        assert isinstance(ref, datetime)
-        fused_m, fused_t = tc.extract_page(text, ref)
-        spec_m = tc.extract_mentions(text)
-        spec_t = tc.extract_triples(text, ref)
-        assert [(m.name, m.label, m.start) for m in fused_m] == \
-               [(m.name, m.label, m.start) for m in spec_m]
-        assert fused_t == spec_t
-        checked_m += len(spec_m)
-        checked_t += len(spec_t)
-    assert checked_m > 500 and checked_t > 500  # corpus actually exercises both
-
-
-def test_extract_page_fusion_parity_edge_texts():
-    from datetime import datetime
-    ref = datetime(2025, 1, 1)
-    cases = [
-        "",
-        "alice_9: Alice Johnson collaborates with Bob Lee since 2024-01-02.",
-        "bob_1: carol_2: Hi there.",  # double speaker prefix
-        "Outage 2024-03-01 hits Acme Systems. The March dip.",
-        "alice_9: alice_9: Alice Johnson works for Acme.",
-        "A B. I The An. March May.",  # stopword-only mentions
-    ]
-    for text in cases:
-        fused_m, fused_t = tc.extract_page(text, ref)
-        assert [(m.name, m.label, m.start) for m in fused_m] == \
-               [(m.name, m.label, m.start) for m in tc.extract_mentions(text)]
-        assert fused_t == tc.extract_triples(text, ref)
-
-
 def test_embed_series_cache_overflow_stays_bit_identical(monkeypatch):
     # the per-task vector caches clear on overflow (bounded memory on
     # near-unique fact sentences); results must stay bit-identical across
