@@ -86,9 +86,10 @@ def _corpus(spark, n_pages: int, richness: int) -> tuple:
         # fixed 128 write partitions regardless of session cores: the group
         # distribution is deliberately skewed (g1 ≈ 2/3 of pages) and parquet
         # scan splits cannot subdivide a file, so few/fat files turn the
-        # extraction stage into a handful of straggler tasks. 128 ~1MB files
-        # give every parallelism level the same balanced, finely-splittable
-        # layout — the local stand-in for a well-bucketed Iceberg table.
+        # extraction stage into a handful of straggler tasks. 128 equal
+        # ~1MB files pack evenly into about one scan task per core at every
+        # parallelism level — the local stand-in for a well-bucketed
+        # Iceberg table.
         pages_spark(spark, n_pages, richness=richness, partitions=128) \
             .write.mode("overwrite").parquet(tmp)
         _CORPUS_CACHE[key] = (tmp, time.time() - t0)

@@ -28,12 +28,14 @@ def _par(df: DataFrame) -> DataFrame:
     """Ensure scan-side parallelism for compute-bound per-row stages.
 
     The operators below pay their cost per ROW (tokenize/shingle/minhash/
-    sketch), not per byte, but Spark sizes file splits and AQE-coalesced
-    exchanges by BYTES — a small parquet (one row group) scans as ONE task
-    and serializes the whole stage onto one core. At production scale the
-    scan has partitions >> cores and this is a no-op (getNumPartitions is a
-    planning-time probe, no job); only when the scan under-splits does it
-    insert one round-robin exchange of the slim input rows."""
+    sketch), not per byte, but Spark sizes file splits (min(128MB, bytes /
+    cores)) and AQE-coalesced exchanges by BYTES, and a split never cuts a
+    parquet row group — a small parquet (one row group) scans as ONE task
+    and serializes the whole stage onto one core. A many-file or
+    production-scale scan already has partitions >= cores and this is a
+    no-op (getNumPartitions is a planning-time probe, no job); only when
+    the scan under-splits does it insert one round-robin exchange of the
+    slim input rows."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if df.rdd.getNumPartitions() < n:

@@ -109,11 +109,10 @@ def get_spark(app: str = "kgspark", cpus: int | None = None,
         # in-flight groups per task.
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
                 str(4 * 1024 * 1024))
-        # local-bench corpora are a few hundred MB; the 128MB default split
-        # would cap scan parallelism below the core count (on a real cluster
-        # with TB-scale tables the default is fine — this only lowers the
-        # floor, AQE coalesces tiny partitions back together)
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
+        # no scan split cap: Spark's own rule (min(128MB, bytes / cores))
+        # gives one wave of scan tasks. Each Python UDF task costs ~0.2
+        # core-seconds in PySpark itself (a no-op mapPartitions on 4 cores:
+        # 3.2 s over 64 tasks, 0.3 s over 4), so finer splits only add cost.
         # AQE's 64MB advisory target would coalesce our few-hundred-MB
         # shuffles down to a handful of tasks, idling most cores; 8MB keeps
         # mid-stage parallelism ≈ core count at bench scale while still

@@ -194,6 +194,9 @@ def temporal_pass(edges: DataFrame, batch_ts: datetime) -> tuple[DataFrame, Data
         .select("uuid",
                 F.col("c.conflict_invalid_at").alias("conflict_invalid_at"),
                 F.col("c.caused_by_edge_uuid").alias("caused_by_edge_uuid"))
+        # LAZY checkpoint: read by `resolved` and by `invalidations` built
+        # from it, so the suffix scan runs once, not once per written table
+        .localCheckpoint(eager=False)
     )
 
     resolved = (

@@ -15,16 +15,24 @@ from pyspark.sql import functions as F
 from kgspark import textcore as tc
 
 
+# Per-task memo bound: a scan task can read a whole 128MB split, so memos
+# keyed by distinct names, facts or sentences are cleared on overflow (as
+# the vector caches below are) instead of growing with the partition.
+_MEMO_CAP = 1 << 17
+
+
 def _memoized(fn):
     """Per-task memo for a pure str->str function (normalization): web text
     repeats names/facts heavily, so distinct-input work is the real cost.
-    Built fresh inside each mapInPandas generator — cache lifetime = one
-    task, so memory is bounded by distinct inputs per partition."""
+    Built fresh inside each mapInPandas generator (cache lifetime = one
+    task) and cleared past ``_MEMO_CAP`` entries."""
     cache: dict[str, str] = {}
 
     def get(s: str) -> str:
         v = cache.get(s)
         if v is None:
+            if len(cache) >= _MEMO_CAP:
+                cache.clear()
             v = cache[s] = fn(s)
         return v
 
@@ -168,9 +176,11 @@ def extract_triples(pages: DataFrame) -> DataFrame:
         # sentence -> sentence_protos memo (ref_ts-independent by
         # construction — textcore.parse_dates_structural): repeated
         # boilerplate sentences skip the regex scan entirely. Same
-        # lifetime/bound as _memoized: one Arrow task.
+        # lifetime/bound as _memoized: one Arrow task, _MEMO_CAP entries.
         sent_cache: dict = {}
         for pdf in batches:
+            if len(sent_cache) > _MEMO_CAP:
+                sent_cache.clear()
             tr_all = [
                 tc.extract_triples_for(src, text, ts.to_pydatetime(), sent_cache)
                 for text, ts, src in zip(pdf["text"], pdf["warc_ts"],

@@ -25,3 +25,14 @@ def test_host_cpus_follows_env_then_host(monkeypatch):
     assert host_cpus() == 3
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert host_cpus() == os.cpu_count()
+
+
+def test_scan_splits_fill_one_wave(spark, tmp_path):
+    # bench layout: many small page files. With no split cap, Spark packs
+    # them into about one task per core instead of one per few files
+    spark.range(20_000).selectExpr("id", "repeat('x', 64) AS text") \
+        .repartition(128).write.parquet(str(tmp_path / "pages"))
+    scan = spark.read.parquet(str(tmp_path / "pages"))
+    assert len(list((tmp_path / "pages").glob("*.parquet"))) == 128
+    n = spark.sparkContext.defaultParallelism
+    assert scan.rdd.getNumPartitions() <= 2 * n

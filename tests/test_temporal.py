@@ -124,3 +124,15 @@ def test_equal_valid_at_no_closure(spark):
         ("e2", "g", "a", "b", "DISLIKES", datetime(2024, 1, 1), None),
     ])
     assert r["e1"]["invalid_at"] is None and r["e2"]["invalid_at"] is None
+
+
+def test_suffix_scan_runs_once_for_both_outputs(spark):
+    # the edges write and the edge_invalidations write are separate jobs;
+    # both must read the checkpointed conflicts, not re-run the Python scan
+    resolved, inv = temporal_pass(_edges(spark, [
+        ("e1", "g", "a", "b", "LIKES", datetime(2024, 1, 1), None),
+        ("e2", "g", "a", "b", "DISLIKES", datetime(2024, 3, 1), None),
+    ]), BATCH_TS)
+    for df in (resolved, inv):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "MapInPandas" not in plan, plan

@@ -73,6 +73,18 @@ def test_embed_series_cache_overflow_stays_bit_identical(monkeypatch):
             assert vec.tolist() == tc.hash_embedding(name), name
 
 
+def test_memoized_overflow_stays_bounded(monkeypatch):
+    # the per-task normalization memo clears past its cap; a whole-split
+    # task must not hold every distinct name, and values never change
+    monkeypatch.setattr(udfs, "_MEMO_CAP", 3)
+    norm = udfs._memoized(tc.normalize_name)
+    (cache,) = [c.cell_contents for c in norm.__closure__
+                if isinstance(c.cell_contents, dict)]
+    for name in NAMES * 3:
+        assert norm(name) == tc.normalize_name(name), name
+        assert len(cache) <= 3
+
+
 def test_embed_series_bit_identical():
     # the batched bincount kernel must be BIT-identical (in float64) to the
     # spec function — linking thresholds compare stored doubles exactly, so
