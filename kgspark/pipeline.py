@@ -20,7 +20,6 @@ by group_id with per-partition lineage for checkpoint/resume.
 from __future__ import annotations
 
 from datetime import datetime
-from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -388,8 +387,3 @@ def build_graph(pages: DataFrame, batch_ts: datetime | None = None,
     )
     out["episodes"] = episodes
     return out
-
-
-def graph_stats(out: dict[str, DataFrame]) -> dict[str, Any]:
-    return {k: out[k].count() for k in
-            ("nodes", "edges", "mentions", "edge_invalidations")}

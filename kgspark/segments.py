@@ -59,7 +59,9 @@ Commit protocol (``GenIndex.append``):
 Crash story: a writer that dies mid-update leaves gen dirs with no marker —
 invisible to every reader (the index stays at its previous committed
 snapshot), removed by the next writer via ``clean_uncommitted``. Readers
-need no recovery path at all.
+need no recovery path at all. Updates of different indexes may run
+concurrently (``streaming.incremental_ingest``); each touches only its own
+root, so no two commits interleave.
 
 Compaction journal (``GenIndex.compact``): tombstones accumulate until a
 compaction rewrites the live rows as a fresh gen-0 index in

@@ -9,22 +9,11 @@ configured here so the same code runs unchanged under ``spark-submit
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
-
-
-def _default_local_dir() -> str:
-    """tmpfs shuffle dirs when /dev/shm is actually big enough (the sandbox
-    has 126G — the honest local stand-in for cluster NVMe+network shuffle);
-    plain system tmp otherwise (default Docker mounts /dev/shm at 64MB,
-    where a spilled shuffle would ENOSPC every wide stage)."""
-    try:
-        st = os.statvfs("/dev/shm")
-        if st.f_bavail * st.f_frsize >= 16 * 1024 ** 3:
-            return "/dev/shm/kgspark-tmp"
-    except OSError:
-        pass
-    return "/tmp"
+from pyspark.util import inheritable_thread_target
 
 
 def host_cpus() -> int:
@@ -86,12 +75,6 @@ def get_spark(app: str = "kgspark", cpus: int | None = None,
                                "-XX:+UnlockExperimentalVMOptions"
                                " -XX:G1NewSizePercent=30"
                                " -XX:G1MaxNewSizePercent=60"))
-        # memory-backed shuffle dirs: local-mode shuffles otherwise hit the
-        # sandbox VM's disk and serialize every wide stage behind I/O — a
-        # real cluster shuffles over NVMe + network. tmpfs is the honest
-        # local stand-in (the box has 126G of /dev/shm)
-        .config("spark.local.dir",
-                os.environ.get("KGSPARK_LOCAL_DIR", _default_local_dir()))
         .config("spark.ui.enabled", "false")
         # event-log knob for offline stage/job attribution
         # (tools/joblog_report.py); off unless a dir is given
@@ -119,6 +102,11 @@ def get_spark(app: str = "kgspark", cpus: int | None = None,
         # merging truly tiny partitions
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(8 * 1024 * 1024))
     )
+    # shuffle and block-manager dirs: Spark's default unless set (a tmpfs
+    # would share the host's RAM with the half-of-MemTotal heap)
+    local_dir = os.environ.get("KGSPARK_LOCAL_DIR")
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     # ad-hoc conf passthrough for A/B experiments:
     # KGSPARK_EXTRA_CONF="spark.io.compression.codec=zstd;spark.x=y"
     extra = os.environ.get("KGSPARK_EXTRA_CONF", "")
@@ -126,3 +114,14 @@ def get_spark(app: str = "kgspark", cpus: int | None = None,
         k, _, v = kv.partition("=")
         builder = builder.config(k.strip(), v.strip())
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, *tasks: Callable[[], Any]) -> list:
+    """Run zero-argument callables (independent Spark work) one thread
+    apiece, inheriting the caller's local properties and tags. Waits for
+    every task, then raises the first failure in submission order or
+    returns the results in order."""
+    with ThreadPoolExecutor(max_workers=max(len(tasks), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t))
+                   for t in tasks]
+    return [f.result() for f in futures]

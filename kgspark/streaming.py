@@ -18,6 +18,7 @@ arrive one at a time and mutate graph state. The Spark-native restatement:
 
 from __future__ import annotations
 
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 from kgspark import io as kio
 from kgspark import udfs
 from kgspark.datagen import PAGES_DDL
+from kgspark.session import run_concurrently
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str,
@@ -74,7 +76,13 @@ def incremental_ingest(spark: SparkSession, input_dir: str, base: str,
     centroids on that batch; later batches take the frozen-centroid FAISS
     add path — run ``datapipe.retrain_ivf_index`` when drift accumulates,
     see ``ivf_drift_metrics``). Same replay-convergence story as the BM25
-    index."""
+    index.
+
+    The graph rebuild and the index upkeep overlap: they write disjoint
+    roots, and each index commits under its own marker-last protocol. A
+    failing branch fails the batch once all branches stop; the replay
+    still converges, as each index re-lands its own generation and
+    tombstones the copy an earlier attempt committed."""
     bronze = str(Path(base) / "_bronze_pages")
     checkpoint_dir = checkpoint_dir or str(Path(base) / "_stream_checkpoint")
     any_index = fulltext_index_dir or ann_index_dir or ivf_index_dir
@@ -108,24 +116,22 @@ def incremental_ingest(spark: SparkSession, input_dir: str, base: str,
                      .filter(F.col("group_id").isin(dirty))
                      .withColumn("__rn", F.row_number().over(w))
                      .filter(F.col("__rn") == 1).drop("__rn"))
-        kio.run_resumable(spark, all_pages, base, compute_embeddings=False)
+        tasks = [lambda: kio.run_resumable(spark, all_pages, base,
+                                           compute_embeddings=False)]
         if any_index:
             from kgspark import datapipe as dp
-            from kgspark import fulltext, segments
-            # each batch url's CURRENT latest-crawl row; pinned — it feeds
-            # one action per maintained index
+            from kgspark import fulltext
+            # each batch url's CURRENT latest-crawl row; pinned before the
+            # branches start — it feeds one action per maintained index
             delta = (all_pages.join(batch_urls, "url", "left_semi")
                      .localCheckpoint())
             if fulltext_index_dir:
-                if segments.committed_gen(fulltext_index_dir) is None:
-                    fulltext.build_fulltext_index(delta, "text",
-                                                  fulltext_index_dir,
-                                                  id_col="url")
-                else:
-                    fulltext.update_fulltext_index(delta, "text",
-                                                   fulltext_index_dir,
-                                                   id_col="url")
-            if ann_index_dir or ivf_index_dir:
+                tasks.append(lambda: _fold(
+                    fulltext.build_fulltext_index,
+                    fulltext.update_fulltext_index, delta,
+                    fulltext_index_dir, text_col="text", id_col="url"))
+
+            def vectors() -> None:
                 # pin the embeddings: the two index updates run several
                 # actions each (dup check, bucket collect, sidecar +
                 # vector writes) and an unpinned plan would recompute the
@@ -135,21 +141,19 @@ def incremental_ingest(spark: SparkSession, input_dir: str, base: str,
                     "url",
                     udfs.embed_expr()(F.col("text")).alias("embedding")
                 ).localCheckpoint()
+                cols = {"id_col": "url", "emb_col": "embedding"}
                 if ann_index_dir:
-                    if segments.committed_gen(ann_index_dir) is None:
-                        dp.build_ann_index(vecs, ann_index_dir, id_col="url",
-                                           emb_col="embedding")
-                    else:
-                        dp.update_ann_index(vecs, ann_index_dir, id_col="url",
-                                            emb_col="embedding")
+                    _fold(dp.build_ann_index, dp.update_ann_index, vecs,
+                          ann_index_dir, **cols)
                 if ivf_index_dir:
-                    if segments.committed_gen(ivf_index_dir) is None:
-                        dp.build_ivf_index(vecs, ivf_index_dir,
-                                           n_clusters=ivf_clusters,
-                                           id_col="url", emb_col="embedding")
-                    else:
-                        dp.update_ivf_index(vecs, ivf_index_dir, id_col="url",
-                                            emb_col="embedding")
+                    _fold(partial(dp.build_ivf_index, n_clusters=ivf_clusters),
+                          dp.update_ivf_index, vecs, ivf_index_dir, **cols)
+
+            if ann_index_dir or ivf_index_dir:
+                tasks.append(vectors)
+        # the graph rebuild and each index's upkeep depend on none of the
+        # others and write disjoint roots, so they overlap
+        run_concurrently(spark, *tasks)
 
     return (read_pages_stream(spark, input_dir, max_files_per_trigger)
             .writeStream
@@ -157,6 +161,15 @@ def incremental_ingest(spark: SparkSession, input_dir: str, base: str,
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
+
+
+def _fold(build, update, df: DataFrame, path: str, **kw) -> None:
+    """Fold ``df`` into the index at ``path`` as one committed generation;
+    the first batch builds it."""
+    from kgspark import segments
+
+    fn = build if segments.committed_gen(path) is None else update
+    fn(df, path=path, **kw)
 
 
 _MONITOR_STATE = ("uuids array<string>, valids array<long>, "
@@ -219,7 +232,10 @@ def streaming_contradiction_monitor(keyed_stream: DataFrame) -> DataFrame:
     (edge_operations.py:234-305 semantics, run incrementally).
 
     State per key is O(facts under that key), capped at MONITOR_MAX_FACTS
-    (a 10^12-corpus hub key cannot grow unbounded executor state)."""
+    (a 10^12-corpus hub key cannot grow unbounded executor state).
+
+    No product path calls it: it is the custom stateful operator of the
+    streaming restatement (SURVEY §2.8), kept with its own test."""
     import pandas as pd
 
     def monitor(key, pdfs, state):

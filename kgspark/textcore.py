@@ -941,12 +941,6 @@ def should_link(name_a: str, name_b: str,
     return False
 
 
-def dynamic_event_base(name: str) -> str:
-    """Base name of a dynamic event with its date token removed, used to chain
-    recurrences via PREVIOUS_INSTANCE."""
-    return normalize_name(_HAS_DATE_RE.sub(" ", name))
-
-
 # MinHash-LSH banding (blocking for the entity-linking similarity self-join,
 # analog of the fulltext/vector candidate search get_relevant_nodes,
 # search_utils.py:638-676). The SAME band keys are computed by the Spark
@@ -985,10 +979,6 @@ def entity_uuid(group_id: str, name: str) -> str:
 
 def edge_uuid(group_id: str, src: str, pred: str, dst: str, norm_fact: str) -> str:
     return md5_hex(f"edge|{group_id}|{src}|{pred}|{dst}|{norm_fact}")
-
-
-def mention_uuid(url: str, node_uuid: str) -> str:
-    return md5_hex(f"mention|{url}|{node_uuid}")
 
 
 def contradiction_keys(subject_uuid: str, predicate: str, object_uuid: str) -> list[str]:

@@ -1,11 +1,13 @@
 """Session sizing comes from the host, not from a fixed large-box default."""
 
 import os
+import threading
+import time
 from pathlib import Path
 
 import pytest
 
-from kgspark.session import default_driver_mem, host_cpus
+from kgspark.session import default_driver_mem, host_cpus, run_concurrently
 
 MEMINFO = Path("/proc/meminfo")
 
@@ -36,3 +38,48 @@ def test_scan_splits_fill_one_wave(spark, tmp_path):
     assert len(list((tmp_path / "pages").glob("*.parquet"))) == 128
     n = spark.sparkContext.defaultParallelism
     assert scan.rdd.getNumPartitions() <= 2 * n
+
+
+def test_local_dir_defaults_to_spark(spark):
+    # no host heuristic: without KGSPARK_LOCAL_DIR, spark.local.dir is unset
+    # and Spark's own default applies
+    assert (spark.sparkContext.getConf().get("spark.local.dir")
+            == os.environ.get("KGSPARK_LOCAL_DIR"))
+
+
+def test_run_concurrently_runs_tasks_at_once(spark):
+    # every task waits for all the others: run one after another, the first
+    # wait would time out
+    barrier = threading.Barrier(4, timeout=30)
+    assert sorted(run_concurrently(spark, *[barrier.wait] * 4)) == [0, 1, 2, 3]
+
+
+def test_run_concurrently_inherits_local_properties(spark):
+    sc = spark.sparkContext
+    sc.setLocalProperty("kgspark.test.label", "outer")
+    try:
+        got = run_concurrently(
+            spark, *[lambda: sc.getLocalProperty("kgspark.test.label")] * 3)
+    finally:
+        sc.setLocalProperty("kgspark.test.label", None)
+    assert got == ["outer"] * 3
+
+
+def test_run_concurrently_raises_first_failure_after_all_finish(spark):
+    done = []
+
+    def late_failure():
+        time.sleep(0.3)
+        done.append("late_failure")
+        raise KeyError("first submitted")
+
+    def early_failure():
+        raise ValueError("first to fail")
+
+    def slow():
+        time.sleep(0.6)
+        done.append("slow")
+
+    with pytest.raises(KeyError, match="first submitted"):
+        run_concurrently(spark, late_failure, early_failure, slow)
+    assert sorted(done) == ["late_failure", "slow"]

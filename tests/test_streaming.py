@@ -230,3 +230,72 @@ def test_incremental_ingest_maintains_vector_indexes(spark, tmp_path):
                                   id_col="url",
                                   emb_col="embedding").collect()]
     assert got_ivf == want
+
+
+def test_replay_after_index_failure_converges(spark, tmp_path, monkeypatch):
+    # the rebuild and the index upkeep overlap. One branch failing fails the
+    # batch after the others have committed; a restart on the same
+    # checkpoint replays it, and every index re-lands its own generation
+    import pytest
+
+    from kgspark import datapipe as dp
+    from kgspark import fulltext, udfs
+
+    pdf = pages_pandas(40)
+    inp = tmp_path / "inc"
+    inp.mkdir()
+    for b, part in enumerate((pdf.iloc[:20], pdf.iloc[20:])):
+        spark.createDataFrame(part).coalesce(1).write \
+            .parquet(str(inp / f"batch_{b}"))
+    base = str(tmp_path / "graph")
+    ft, ann, ivf = (str(tmp_path / d) for d in ("ft", "ann", "ivf"))
+    calls = []
+    update_ivf = dp.update_ivf_index
+
+    def failing_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected IVF update failure")
+        return update_ivf(*args, **kwargs)
+
+    monkeypatch.setattr(dp, "update_ivf_index", failing_once)
+
+    def stream():
+        streaming.incremental_ingest(
+            spark, str(inp) + "/*", base, max_files_per_trigger=1,
+            fulltext_index_dir=ft, ann_index_dir=ann, ivf_index_dir=ivf,
+            ivf_clusters=4).awaitTermination(300)
+
+    with pytest.raises(Exception, match="injected IVF update failure"):
+        stream()
+    stream()
+    assert len(calls) == 2
+
+    stream_edges = {(r["uuid"], r["valid_at"], r["invalid_at"])
+                    for r in kio.read_table(spark, base, "edges")
+                    .select("uuid", "valid_at", "invalid_at").collect()}
+    corpus = spark.createDataFrame(pdf)
+    batch_edges = {(r["uuid"], r["valid_at"], r["invalid_at"])
+                   for r in build_graph(corpus, check_text=False,
+                                        compute_embeddings=False)["edges"]
+                   .select("uuid", "valid_at", "invalid_at").collect()}
+    assert stream_edges == batch_edges and stream_edges
+
+    qy = " ".join(str(pdf["text"].iloc[30]).split()[:4])
+    scan = {r["url"]: r["score"] for r in fulltext.bm25_search(
+        corpus, "text", qy, limit=200, id_col="url").collect()}
+    got = {r["url"]: r["score"] for r in fulltext.bm25_query_indexed(
+        spark, ft, qy, limit=200, id_col="url").collect()}
+    assert got == pytest.approx(scan, abs=1e-12) and scan
+
+    vecs = corpus.select(
+        "url", udfs.embed_expr()(F.col("text")).alias("embedding"))
+    qv = [float(x) for x in vecs.orderBy("url").first()["embedding"]]
+    want = [r["id"] for r in dp.ann_bruteforce(
+        vecs, qv, k=8, id_col="url", emb_col="embedding").collect()]
+    assert want == [r["id"] for r in dp.ann_query_indexed(
+        spark, ann, qv, k=8, probe_hamming=12, id_col="url",
+        emb_col="embedding").collect()]
+    assert want == [r["id"] for r in dp.ann_ivf_indexed(
+        spark, ivf, qv, k=8, nprobe=4, id_col="url",
+        emb_col="embedding").collect()]
