@@ -300,11 +300,8 @@ def hyperplane_buckets(emb: DataFrame, n_planes: int = 12,
             if planes is None:
                 planes = _hyperplanes(m.shape[1], n_planes)
             signs = (m @ planes.T) > 0
-            # 'b' prefix keeps the partition value a STRING on read-back:
-            # an all-digit bucket would hit Spark's partition-column type
-            # inference (bigint), and bigint-vs-string probe comparison
-            # coerces to double — silently collapsing distinct buckets once
-            # n_planes digits exceed 2^53 (n_planes >= 17)
+            # 'b' + one char per plane: the prefix is part of every stored
+            # bucket value, and embedding_neardups' band offsets skip it
             buckets = ["b" + "".join("1" if s else "0" for s in row)
                        for row in signs]
             yield pd.DataFrame({"id": pdf[id_col], "bucket": buckets})
@@ -317,9 +314,8 @@ def ann_lsh(emb: DataFrame, query_vec: list[float], k: int = 10,
             n_planes: int = 12, probe_hamming: int = 2,
             id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
     """LSH-bucketed ANN: candidates from buckets within ``probe_hamming``
-    sign-flips of the query bucket, exact cosine rescore. At 10^12 scale the
-    bucket column is a partition key, so a query prunes to a handful of
-    partitions instead of a full scan."""
+    sign-flips of the query bucket, exact cosine rescore. Buckets are
+    recomputed per call; ``build_ann_index`` persists them."""
     buckets = hyperplane_buckets(emb, n_planes, id_col, emb_col)
     qv = np.asarray(query_vec, dtype=np.float64)
     planes = _hyperplanes(len(query_vec), n_planes)
@@ -369,13 +365,12 @@ def build_ann_index(emb: DataFrame, path: str, n_planes: int = 12,
                     id_col: str = "vec_id",
                     emb_col: str = "embedding") -> None:
     """Persist an LSH-bucketed ANN index: vectors + their sign-projection
-    bucket at ``{path}/vectors/gen=N/bucket=.../`` (generation-committed —
-    kgspark.segments; grow it with ``update_ann_index``, never rebuild). A
-    query reads only the probed buckets' partitions (partition pruning at
-    the scan — the IVF-file/nprobe layout), instead of recomputing buckets
-    over the whole table per query (the r1 weakness). At 10^12 scale this
-    is the difference between a full scan and touching a handful of
-    partitions. n_planes is baked into every stored bucket, so the index
+    bucket under ``{path}/vectors/gen=N/``, sorted by bucket
+    (generation-committed — kgspark.segments; grow it with
+    ``update_ann_index``, never rebuild). A query pushes its probed buckets
+    into the parquet scan, where row-group statistics skip the rest,
+    instead of recomputing buckets over the whole table per query (the r1
+    weakness). n_planes is baked into every stored bucket, so the index
     keeps it and refuses a caller that disagrees."""
     ix = segments.GenIndex.create(emb.sparkSession, path,
                                   {"vectors": ["bucket"]}, "ids",
@@ -408,8 +403,9 @@ def update_ann_index(emb: DataFrame, path: str, n_planes: int | None = None,
 
 def compact_ann_index(spark, path: str, id_col: str = "vec_id") -> None:
     """Rewrite the live vectors of an ANN or IVF index as a fresh gen-0
-    index and swap it in (journaled) — bounds tombstones and
-    per-partition file counts; IVF centroids carry over."""
+    index and swap it in (journaled) — bounds tombstones and the file
+    count that one generation per update accumulates; IVF centroids carry
+    over."""
     ix = segments.GenIndex.open(spark, path, "vector", write=True)
     ix.compact({"vectors": ix.live("vectors", id_col), "ids": ix.id_rows()})
 
@@ -419,25 +415,29 @@ def ann_query_indexed(spark, path: str, query_vec: list[float], k: int = 10,
                       id_col: str = "vec_id",
                       emb_col: str = "embedding") -> DataFrame:
     """Top-k over a persisted ANN index: enumerate buckets within
-    ``probe_hamming`` sign flips of the query's bucket, scan ONLY those
-    partitions (`bucket IN (...)` prunes at the parquet source), exact
-    cosine rescore. Reads the latest committed generation and drops
+    ``probe_hamming`` sign flips of the query's bucket, push `bucket IN
+    (...)` into the parquet scan, exact cosine rescore. A probe of
+    ``n_planes`` flips or more covers every bucket, so it reads without a
+    bucket filter. Reads the latest committed generation and drops
     tombstoned vectors (broadcast anti-join — see update_ann_index)."""
     from itertools import combinations
 
     ix = segments.GenIndex.open(spark, path, "ANN")
     n_planes = _ann_check_planes(ix, n_planes, "ann_query_indexed")
-    qv = np.asarray(query_vec, dtype=np.float64)
-    planes = _hyperplanes(len(query_vec), n_planes)
-    qbits = [(1 if s else 0) for s in (planes @ qv) > 0]
-    probes = []
-    for dist in range(probe_hamming + 1):
-        for flips in combinations(range(n_planes), dist):
-            bits = list(qbits)
-            for f in flips:
-                bits[f] ^= 1
-            probes.append("b" + "".join(map(str, bits)))
-    idx = ix.live("vectors", id_col, prune={"bucket": probes})
+    prune = None
+    if probe_hamming < n_planes:
+        qv = np.asarray(query_vec, dtype=np.float64)
+        planes = _hyperplanes(len(query_vec), n_planes)
+        qbits = [(1 if s else 0) for s in (planes @ qv) > 0]
+        probes = []
+        for dist in range(probe_hamming + 1):
+            for flips in combinations(range(n_planes), dist):
+                bits = list(qbits)
+                for f in flips:
+                    bits[f] ^= 1
+                probes.append("b" + "".join(map(str, bits)))
+        prune = {"bucket": probes}
+    idx = ix.live("vectors", id_col, prune=prune)
     return ann_bruteforce(idx, query_vec, k, id_col, emb_col)
 
 
@@ -445,12 +445,12 @@ def ann_query_indexed(spark, path: str, query_vec: list[float], k: int = 10,
 # IVF ANN — the data-DEPENDENT coarse quantizer, complementing the
 # data-independent hyperplane LSH above. Centroids are learned with a
 # deterministic distributed Lloyd iteration (seeded by md5-ordered vector
-# ids, fixed iteration count — no RNG state, resumable); vectors partition
-# by nearest centroid; a query probes only the ``nprobe`` nearest clusters
-# and rescores exactly. At 10^12 scale the cluster id is the partition key
-# (same layout as build_ann_index), so nprobe ≈ nprobe/k of the table is
-# scanned. nprobe == k degenerates to exact brute force, which is how the
-# driver oracle checks it.
+# ids, fixed iteration count — no RNG state, resumable); vectors are
+# stored sorted by nearest centroid; a query probes only the ``nprobe``
+# nearest clusters and rescores exactly. The cluster id is the sort column
+# (same layout as build_ann_index), so at scale row-group statistics skip
+# about 1 - nprobe/k of the table. nprobe == k degenerates to exact brute
+# force, which is how the driver oracle checks it.
 # ---------------------------------------------------------------------------
 
 
@@ -536,10 +536,10 @@ def ann_ivf(emb: DataFrame, query_vec: list[float], k: int = 10,
 def build_ivf_index(emb: DataFrame, path: str, n_clusters: int = 16,
                     iters: int = 2, id_col: str = "vec_id",
                     emb_col: str = "embedding") -> list[list[float]]:
-    """Persist the IVF layout: vectors parquet PARTITIONED BY cluster id
-    at ``{path}/vectors/gen=N/cluster=.../`` (generation-committed; grow
-    with ``update_ivf_index``), centroids in the index metadata. Queries
-    prune to nprobe partitions at the scan. Returns the centroids."""
+    """Persist the IVF layout: vectors parquet sorted by cluster id under
+    ``{path}/vectors/gen=N/`` (generation-committed; grow with
+    ``update_ivf_index``), centroids in the index metadata. Queries push
+    their nprobe clusters into the scan. Returns the centroids."""
     cents = ivf_centroids(emb, n_clusters, iters, id_col, emb_col)
     ix = segments.GenIndex.create(emb.sparkSession, path,
                                   {"vectors": ["cluster"]}, "ids",
@@ -567,9 +567,9 @@ def update_ivf_index(emb: DataFrame, path: str, id_col: str = "vec_id",
 def ann_ivf_indexed(spark, path: str, query_vec: list[float], k: int = 10,
                     nprobe: int = 4, id_col: str = "vec_id",
                     emb_col: str = "embedding") -> DataFrame:
-    """Top-k over a persisted IVF index: `cluster IN (nearest nprobe)`
-    prunes at the parquet source; exact rescore inside the probed
-    partitions. Committed-generation + tombstone semantics as
+    """Top-k over a persisted IVF index: `cluster IN (nearest nprobe)` is
+    pushed into the parquet scan; exact rescore inside the probed
+    clusters. Committed-generation + tombstone semantics as
     ann_query_indexed."""
     ix = segments.GenIndex.open(spark, path, "IVF")
     probe = _ivf_probe(ix.meta["centroids"], query_vec, nprobe)
@@ -793,31 +793,6 @@ def extract_image_features(df: DataFrame, id_col: str, binary_col: str,
             yield pd.DataFrame(rows)
 
     return df.select(id_col, binary_col).mapInPandas(run, IMAGE_FEATURES_DDL)
-
-
-FRAME_SAMPLE_DDL = "id long, frame_index int, frame_hash string"
-
-
-def sample_frames(df: DataFrame, id_col: str, binary_col: str,
-                  n_frames: int = 3) -> DataFrame:
-    """Video frame-sampling plumbing (STUB decode): emits ``n_frames``
-    deterministic pseudo-frames per blob — the fan-out shape (1 row in,
-    N rows out via mapInPandas) matches a real ffmpeg-backed sampler."""
-    import hashlib
-
-    def run(batches):
-        for pdf in batches:
-            rows = {"id": [], "frame_index": [], "frame_hash": []}
-            for i, blob in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(blob) if blob is not None else b""
-                for fi in range(n_frames):
-                    rows["id"].append(i)
-                    rows["frame_index"].append(fi)
-                    rows["frame_hash"].append(
-                        hashlib.md5(b + bytes([fi])).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, binary_col).mapInPandas(run, FRAME_SAMPLE_DDL)
 
 
 # ---------------------------------------------------------------------------

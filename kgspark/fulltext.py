@@ -107,7 +107,7 @@ def bm25_search(df: DataFrame, text_col: str, query: str, limit: int = 20,
 
 # ---------------------------------------------------------------------------
 # Persisted fulltext index — the read-side twin of datapipe.build_ann_index:
-# tokenized once, grown per delta batch, queried by term-bucket partition
+# tokenized once, grown per delta batch, queried by term bucket
 # (the reference queries Lucene indexes built once, graph_data_operations.py
 # :73-80). On-disk layout, generations, tombstones and compaction: the
 # kgspark.segments module docstring.
@@ -233,7 +233,7 @@ def update_fulltext_index(df: DataFrame, text_col: str, path: str,
 def compact_fulltext_index(spark, path: str) -> None:
     """Rewrite the live rows as a fresh single-generation index and swap it
     in (journaled — interrupt anywhere and re-run to finish). Bounds the
-    tombstone set and the per-term-bucket file count that pure appends
+    tombstone set and the generation and file counts that pure appends
     accumulate; run it on the same cadence Lucene runs segment merges."""
     ix = segments.GenIndex.open(spark, path, "fulltext", write=True)
     rows = {"postings": ix.live("postings"), "docs": ix.live("docs"),
@@ -253,9 +253,10 @@ def bm25_query_indexed(spark, path: str, query: str, limit: int = 20,
                        id_col: str = "uuid",
                        k1: float = BM25_K1, b: float = BM25_B,
                        stats_scope: str = "local") -> DataFrame:
-    """BM25 top-k over a persisted fulltext index: scans ONLY the query
-    terms' ≤32 postings partitions (term_bucket pruning at the parquet
-    source) — no corpus-sized scan, shuffle, or join anywhere in the plan.
+    """BM25 top-k over a persisted fulltext index: the query terms' ≤32
+    term buckets are pushed into the postings scan, where row-group
+    statistics skip the other buckets — no corpus-sized shuffle or join
+    anywhere in the plan.
     Scores match ``bm25_search`` on the same corpus to float precision.
 
     ``group_ids`` filters candidates; with ``stats_scope='local'`` (the

@@ -314,8 +314,8 @@ def hybrid_search(df: DataFrame, text_col: str, emb_col: str, query: str,
     """bm25 ∪ cosine → dedup-by-uuid → reranker (search.py:189-238 shape).
 
     ``fulltext_index_path``: route the fulltext leg through the PERSISTED
-    BM25 postings index (``fulltext.bm25_query_indexed`` — scans only the
-    query terms' ≤32 term-bucket partitions) instead of the scan-path
+    BM25 postings index (``fulltext.bm25_query_indexed`` — reads only the
+    query terms' ≤32 term buckets) instead of the scan-path
     ``bm25_search`` that re-aggregates the corpus per query. This is the
     reference's actual read-side shape — its search always runs against
     Lucene indexes built once (search_utils.py:143-194 over indexes from
@@ -393,7 +393,7 @@ def hybrid_node_search(nodes: DataFrame, queries: list[str],
     ``fulltext_index_path``: run every fulltext leg against the persisted
     BM25 postings index over the nodes table (same semantics and float-exact
     scores as the default scan path — see hybrid_search); each per-query leg
-    then touches only its terms' postings partitions instead of
+    then reads only its terms' postings buckets instead of
     re-aggregating the node corpus per query.
     """
     if fulltext_index_path is not None:

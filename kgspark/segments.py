@@ -15,32 +15,38 @@ On-disk layout of an index rooted at ``{root}``::
 
     {root}/_meta.json                 layout version + family parameters
     {root}/_commits/gen_N             commit marker of generation N
-    {root}/{part}/gen=N/{cols}=.../   one generation of a data part
-    {root}/{id_part}/gen=N/id_bucket=B/   (id, id_bucket[, extra]) rows
+    {root}/{part}/gen=N/part-*.parquet   one generation of a part
     {root}/deleted/gen=N/             (id, dead_gen) tombstones
 
+``gen`` is the only partition column. Each generation of a part is a few
+plain files (one per write task), their rows sorted by the part's sort
+column, so a filter on that column is pushed into the parquet scan and
+row-group min/max statistics skip the rows it excludes. Build, update and
+compaction write the same layout. A generation costs one file per write
+task, not one per touched bucket, which is what keeps a small delta cheap.
+
 ``_meta.json`` holds ``layout`` (``LAYOUT_VERSION``), ``parts`` (each data
-part and its partition columns), ``id_part`` (the id-bucketed collision
-part), ``id_buckets``, and the family's own parameters. An index without
-the current layout version is refused with a "rebuild required"
+part and its sort column, if any), ``id_part`` (the collision part, sorted
+by ``id_bucket``), ``id_buckets``, and the family's own parameters. An index
+without the current layout version is refused with a "rebuild required"
 ``ValueError`` by every reader and writer. The families:
 
-- BM25 (``fulltext``): ``postings`` (term, id, tf, dlen[, group_id]) by
-  ``term_bucket = md5(term) % num_buckets``, so a query prunes to its
-  terms' partitions, with dlen and group_id denormalized so that scoring
-  joins nothing corpus-sized; ``docs`` (id, dlen[, group_id]) as the id
-  part;
+- BM25 (``fulltext``): ``postings`` (term, id, tf, dlen, term_bucket[,
+  group_id]) sorted by ``term_bucket = md5(term) % num_buckets``, so a
+  query reads only its terms' buckets, with dlen and group_id denormalized
+  so that scoring joins nothing corpus-sized; ``docs`` (id, dlen[,
+  group_id]) as the id part;
   ``stats`` one cumulative (n_docs, total_len, avgdl) row per generation;
   ``group_stats`` per-group (n_docs, total_len) deltas when the corpus has
   a ``group_id``. Parameters: ``num_buckets``.
-- LSH-ANN (``datapipe``): ``vectors`` (id_col, embedding) by ``bucket``;
-  ``ids`` as the id part. Parameters: ``n_planes``.
-- IVF (``datapipe``): ``vectors`` (id_col, embedding) by ``cluster``;
-  ``ids`` as the id part. Parameters: ``centroids``.
+- LSH-ANN (``datapipe``): ``vectors`` (id_col, embedding, bucket) sorted by
+  ``bucket``; ``ids`` as the id part. Parameters: ``n_planes``.
+- IVF (``datapipe``): ``vectors`` (id_col, embedding, cluster) sorted by
+  ``cluster``; ``ids`` as the id part. Parameters: ``centroids``.
 
-The id part is partitioned by ``id_bucket = md5(id) % id_buckets``
-(``_id_bucket_col``), so the collision scan of an update reads only the
-delta ids' buckets: no update touches the whole corpus.
+The id part carries ``id_bucket = md5(id) % id_buckets`` (``_id_bucket_col``),
+so the collision scan of an update pushes a filter on the delta ids'
+buckets into the parquet scan, and row-group statistics skip the rest.
 
 Commit protocol (``GenIndex.append``):
 
@@ -53,8 +59,8 @@ Commit protocol (``GenIndex.append``):
 - a generation becomes visible ONLY when its marker ``_commits/gen_N``
   exists, and the marker is written LAST (``commit_gen``). Readers
   resolve ``committed = max N with a marker`` and filter every scan with
-  ``gen <= committed`` — a partition filter, pruned at the parquet source
-  (``GenIndex.live``).
+  ``gen <= committed`` — a partition filter, so the scan never opens a
+  later generation's files (``GenIndex.live``).
 
 Crash story: a writer that dies mid-update leaves gen dirs with no marker —
 invisible to every reader (the index stays at its previous committed
@@ -90,7 +96,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LAYOUT_VERSION = 1
+LAYOUT_VERSION = 2
 
 _GEN_RE = re.compile(r"^gen_(\d+)$")
 _GEN_DIR_RE = re.compile(r"^gen=(\d+)$")
@@ -133,12 +139,14 @@ def commit_gen(root: str, gen: int) -> None:
 
 
 def append_gen(df: DataFrame, path: str, gen: int,
-               part_cols: list[str]) -> None:
-    """Append one generation's rows: a brand-new gen=N dir per partition —
-    parquet ``append`` never rewrites existing files, so concurrent readers
-    of the previous committed gen are undisturbed."""
-    (df.withColumn("gen", F.lit(gen))
-       .write.mode("append").partitionBy("gen", *part_cols).parquet(path))
+               sort_cols: list[str]) -> None:
+    """Append one generation's rows as plain files in a brand-new gen=N dir,
+    each write task's rows sorted by ``sort_cols`` — parquet ``append``
+    never rewrites existing files, so concurrent readers of the previous
+    committed gen are undisturbed."""
+    if sort_cols:
+        df = df.sortWithinPartitions(*sort_cols)
+    df.write.mode("append").parquet(f"{path}/gen={gen}")
 
 
 def clean_uncommitted(root: str, parts) -> list[str]:
@@ -161,10 +169,9 @@ def clean_uncommitted(root: str, parts) -> list[str]:
 
 
 def has_gens(path: str) -> bool:
-    """True if ``path`` holds at least one gen=N partition dir. An append
-    of an empty DataFrame (or clean_uncommitted) can leave the dir with
-    only a _SUCCESS marker — unreadable by schema inference, and logically
-    empty anyway."""
+    """True if ``path`` holds at least one gen=N dir. Before its first
+    write (or after clean_uncommitted) a part dir holds none — unreadable by
+    schema inference, and logically empty anyway."""
     p = Path(path)
     return p.exists() and any(_GEN_DIR_RE.match(d.name) for d in p.iterdir())
 
@@ -221,8 +228,8 @@ class GenIndex:
                id_part: str, id_buckets: int, **params) -> GenIndex:
         """Start a fresh index at ``root`` (overwrite semantics, including
         any leftover compaction journal). ``parts`` maps each data part to
-        its partition columns; ``id_part`` is added, partitioned by
-        id_bucket. ``params`` are the family's parameters, kept in
+        its sort column (a list of at most one); ``id_part`` is added,
+        sorted by id_bucket. ``params`` are the family's parameters, kept in
         _meta.json."""
         shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(root + ".compact.staging", ignore_errors=True)
@@ -267,8 +274,10 @@ class GenIndex:
     def live(self, part: str, id_col: str = "id",
              prune: dict | None = None) -> DataFrame:
         """Live rows of ``part``: committed generations minus tombstones,
-        matched on the part's ``id_col``. ``prune`` maps partition columns to the values to keep, so the scan
-        reads only those partitions. Tombstones are broadcast: their count
+        matched on the part's ``id_col``. ``prune`` maps columns to the
+        values to keep; on a part's sort column the filter is pushed into
+        the parquet scan, where row-group statistics skip the other
+        buckets. Tombstones are broadcast: their count
         is the number of re-ingested ids since the last compaction, not the
         corpus size."""
         rows = self.read(part)

@@ -95,7 +95,16 @@ def incremental_ingest(spark: SparkSession, input_dir: str, base: str,
         if batch_df.isEmpty():
             batch_df.unpersist()
             return
-        (batch_df.write.mode("append").partitionBy("group_id").parquet(bronze))
+        # a foreachBatch replay re-runs a batch id: its marker, written
+        # after the append, keeps the replay from landing the pages twice
+        # (a crash between the two still re-appends; the latest-crawl pick
+        # below drops such copies)
+        landed = Path(bronze) / "_batches" / str(batch_id)
+        if not landed.exists():
+            (batch_df.write.mode("append").partitionBy("group_id")
+             .parquet(bronze))
+            landed.parent.mkdir(parents=True, exist_ok=True)
+            landed.touch()
         dirty = [r["group_id"] for r in
                  batch_df.select("group_id").distinct().collect()]
         batch_urls = (batch_df.select("url").distinct()

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from kgspark import datapipe as dp  # noqa: E402
 from kgspark import fulltext, segments  # noqa: E402
+from tests.test_datapipe import _pushed  # noqa: E402
 
 
 def _docs_df(spark, rows):
@@ -423,8 +424,8 @@ def test_bm25_indexed_group_local_needs_grouped_index(spark, tmp_path):
 
 def test_fulltext_update_collision_scan_prunes_docs(spark, tmp_path):
     # r4 verdict missing #3: docs/ is id-bucketed so the update-time
-    # collision scan prunes to the delta ids' buckets — assert the
-    # partition filter reaches the parquet scan, and that pruned results
+    # collision scan prunes to the delta ids' buckets — assert the bucket
+    # predicate is pushed into the parquet scan, and that pruned results
     # equal the unpruned live-docs view restricted to those buckets
     path = str(tmp_path / "ftpr")
     fulltext.build_fulltext_index(_corpus_a(spark), "fact", path,
@@ -434,7 +435,7 @@ def test_fulltext_update_collision_scan_prunes_docs(spark, tmp_path):
     bks = [fulltext.term_bucket(str(i), 16) for i in (1, 2, 3)]
     pruned = ix.id_rows(sorted(set(bks)))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "id_bucket" in plan
+    assert _pushed(plan, "id_bucket"), plan
     full = ix.id_rows()
     want = {r["id"] for r in full.collect()
             if fulltext.term_bucket(str(r["id"]), 16) in set(bks)}
@@ -450,7 +451,7 @@ def test_ann_update_collision_scan_prunes_ids(spark, tmp_path):
     ix = segments.GenIndex.open(spark, path, "ANN")
     live = ix.id_rows(ix.delta_buckets(delta, "vec_id"))
     plan = live._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "id_bucket" in plan
+    assert _pushed(plan, "id_bucket"), plan
     # correctness of the full update cycle is pinned by
     # test_ann_update_matches_fresh_build; here pin that the pruned view
     # still sees the colliding ids
@@ -601,11 +602,13 @@ def test_legacy_layout_requires_rebuild(spark, tmp_path, family):
     path = str(tmp_path / family)
     build(spark, path)
     meta = Path(path) / "_meta.json"
-    old = {**json.loads(meta.read_text()), "layout": 0}
+    cur = json.loads(meta.read_text())
+    # layout 1 partitioned every generation by its bucket column
+    old = [{**cur, "layout": v} for v in (0, 1)]
     ops = [update, compact, query]
     if family == "ivf":
         ops += [dp.retrain_ivf_index, dp.ivf_drift_metrics]
-    for legacy in (None, old):
+    for legacy in (None, *old):
         if legacy is None:
             meta.unlink()  # written before the engine kept a layout
         else:

@@ -280,6 +280,10 @@ def test_replay_after_index_failure_converges(spark, tmp_path, monkeypatch):
                                         compute_embeddings=False)["edges"]
                    .select("uuid", "valid_at", "invalid_at").collect()}
     assert stream_edges == batch_edges and stream_edges
+    # the replayed batch lands its pages in bronze once
+    bronze = spark.read.parquet(base + "/_bronze_pages")
+    assert bronze.count() == bronze.select("url", "warc_ts").distinct() \
+        .count() == len(pdf)
 
     qy = " ".join(str(pdf["text"].iloc[30]).split()[:4])
     scan = {r["url"]: r["score"] for r in fulltext.bm25_search(
